@@ -931,12 +931,11 @@ class TableCatalog:
     def drop(self, name: str) -> None:
         path = os.path.join(self.root, *name.split("."))
         shutil.rmtree(path, ignore_errors=True)
-        # a dropped table takes ALL its bookkeeping with it: the legacy
-        # round-9 epoch sidecar next to the table dir, any store
-        # rotation dirs, and the in-process epoch cache — otherwise a
-        # table recreated at this path under a fresh checkpoint lineage
-        # would inherit a stale epoch and silently skip every batch
-        # (round-9 ADVICE). Table txns need no cleanup: they live in
+        # a dropped table takes its store rotation dirs with it —
+        # otherwise recover_store could roll a leftover backup into
+        # place, and a table recreated at this path under a fresh
+        # checkpoint lineage would inherit its stale epoch and silently
+        # skip every batch. Table txns need no cleanup: they live in
         # the pointer file that was just removed.
         from ..session import drop_store
 

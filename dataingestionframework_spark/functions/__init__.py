@@ -100,16 +100,6 @@ def stopword_count(text: Column, stopwords: tuple[str, ...] = DEFAULT_STOPWORDS)
     return F.size(F.filter(tokens(text), lambda t: F.array_contains(sw, t)))
 
 
-def char_ngrams(text: Column, n: int = 5) -> Column:
-    """Character n-gram (shingle) array of a text column, distinct."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(text) - (n - 1), F.lit(1))),
-            lambda i: F.substring(text, i, n),
-        )
-    )
-
-
 def word_ngrams(text: Column, n: int = 3) -> Column:
     """Word n-gram array (space-joined shingles), distinct.
 

@@ -20,57 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _recover_or_probe_parquet(spark, path: str) -> bool:
-    """Parquet-sink analog of :func:`_recover_or_probe_index`: the
-    staged swap has a crash window between rename(path → ``.__bak__``)
-    and rename(``.__staged__`` → path) where the sink name is empty
-    while a complete copy survives under a sibling name. Promote the
-    best surviving copy — ``.__staged__`` (the completed post-forget
-    image) over ``.__bak__`` (the pre-forget image) — so the next
-    forget/read heals instead of failing on a missing path with the
-    data stranded. Returns whether the path exists after recovery."""
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path
-    fs = jpath(path).getFileSystem(sc._jsc.hadoopConfiguration())
-    if fs.exists(jpath(path)):
-        return True
-    for cand in (path.rstrip("/") + ".__staged__", path.rstrip("/") + ".__bak__"):
-        if fs.exists(jpath(cand)):
-            if not fs.rename(jpath(cand), jpath(path)):
-                raise IOError(f"staged-swap recovery: could not promote {cand} to {path}")
-            return True
-    return False
-
-
-def _staged_parquet_swap(spark, df: DataFrame, path: str) -> int:
-    """Rewrite ``path`` with ``df``'s rows without ever holding the only
-    copy in memory: write to a sibling ``.__staged__`` dir (durable on
-    disk), then swap via two FileSystem renames (old → ``.__bak__``,
-    staged → path) and drop the backup. A crash at any point leaves a
-    complete copy on disk — either the original (before the first
-    rename) or the staged output — unlike an in-place
-    ``mode('overwrite')`` on the path being read, which deletes the old
-    files before the (checkpoint-backed) rewrite lands. Renames are
-    atomic on HDFS/local; on object stores use the Delta path instead
-    (documented in DEPLOY.md). Returns the kept-row count (read back
-    from the durable staged files)."""
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path
-    fs = jpath(path).getFileSystem(sc._jsc.hadoopConfiguration())
-    tmp, bak = path.rstrip("/") + ".__staged__", path.rstrip("/") + ".__bak__"
-    fs.delete(jpath(tmp), True)
-    fs.delete(jpath(bak), True)
-    df.write.mode("overwrite").parquet(tmp)
-    kept = spark.read.parquet(tmp).count()
-    if not fs.rename(jpath(path), jpath(bak)):
-        raise IOError(f"staged swap: could not move {path} aside")
-    if not fs.rename(jpath(tmp), jpath(path)):
-        fs.rename(jpath(bak), jpath(path))  # roll back, original intact
-        raise IOError(f"staged swap: could not promote {tmp} to {path}")
-    fs.delete(jpath(bak), True)
-    return kept
-
-
 @dataclass
 class CorpusPrepSpec:
     """Declarative corpus-prep config (the LLM twin of IngestionSpec)."""
@@ -355,25 +304,7 @@ def corpus_incremental_near_dup_intake(
     dropped_path = sink_path.rstrip("/") + "_dropped"
 
     def handle(batch: DataFrame, _epoch: int) -> None:
-        import os as _os
-        import sys as _sys
-        import time as _time
-
         spark = batch.sparkSession
-        _trace = _os.environ.get("DIF_PHASE_STDERR")
-        _t0 = _time.perf_counter()
-
-        def phase(name: str) -> None:
-            # opt-in per-phase wall timings (stderr only): the per-batch
-            # cost split the optimization rounds need without a UI
-            nonlocal _t0
-            if _trace:
-                t1 = _time.perf_counter()
-                print(
-                    f"# near_dup batch={_epoch} {name}: {t1 - _t0:.3f}s",
-                    file=_sys.stderr,
-                )
-                _t0 = t1
 
         def _read_or_none(path: str) -> DataFrame | None:
             # probe, not try/except: a transient read failure while the
@@ -401,7 +332,6 @@ def corpus_incremental_near_dup_intake(
         # blocker-less batches was a net LOSS — the recomputation costs
         # more than the pin job)
         b = b.localCheckpoint()
-        phase("pin_batch")
         texts = b.select(id_col, text_col)
         if blockers is not None:
             texts = texts.unionByName(blockers)
@@ -430,7 +360,6 @@ def corpus_incremental_near_dup_intake(
             b, spark, index_table, text_col=text_col, id_col=id_col,
             num_hashes=num_hashes, bands=bands, consume=_verify_drop,
         )
-        phase("lsh_update_verify")
         (
             b.join(drop, id_col, "left_semi")
             .select(id_col, text_col)
@@ -438,7 +367,6 @@ def corpus_incremental_near_dup_intake(
             .parquet(dropped_path)
         )
         b.join(drop, id_col, "left_anti").write.mode("append").parquet(sink_path)
-        phase("writes")
         # superseded per-batch state: the sink/dropped appends are the
         # durable record, so the batch pins are never read again —
         # release them now instead of holding every batch's blocks
@@ -673,21 +601,53 @@ def embedding_incremental_ann_intake(
     )
 
 
-def _recover_or_probe_index(spark, index_table: str) -> bool:
-    """The staged index swap has a tiny window (live table renamed
-    aside, staged not yet promoted). If a crash left the name empty,
-    promote the best surviving copy — ``__staged`` (the completed
-    post-forget image) over ``__old`` (the pre-forget image) — so a
-    retry heals instead of silently reporting removed=0 with index
-    residue stranded under a sibling name. Returns tableExists after
-    recovery."""
-    if spark.catalog.tableExists(index_table):
-        return True
-    for cand in (f"{index_table}__staged", f"{index_table}__old"):
-        if spark.catalog.tableExists(cand):
-            spark.sql(f"ALTER TABLE {cand} RENAME TO {index_table}")
-            return True
-    return False
+def _forget_ids(spark, forget_ids, id_col: str) -> DataFrame:
+    if isinstance(forget_ids, (list, tuple)):
+        ids = spark.createDataFrame(
+            [(int(i),) for i in forget_ids], f"{id_col} long"
+        )
+    else:
+        ids = forget_ids.select(id_col)
+    return ids.localCheckpoint()
+
+
+def _forget_in_store(spark, ids: DataFrame, path: str, id_col: str) -> int:
+    """Anti-join ``ids`` out of the parquet store at ``path`` through
+    the store commit protocol (epoch carried forward); returns the
+    removed-row count, 0 when no store exists."""
+    from ..session import commit_store, recover_store
+
+    # recovery first (heals a crashed prior swap), then a bare read so
+    # real errors propagate instead of reporting 0
+    if recover_store(spark, path) == "absent":
+        return 0
+    cur = spark.read.parquet(path)
+    before = cur.count()
+    commit_store(cur.join(ids, id_col, "left_anti"), path)
+    return before - spark.read.parquet(path).count()
+
+
+def _forget_in_index(
+    spark, ids: DataFrame, index_table: str | None, key_col: str,
+    bucket_col: str, n_buckets: int,
+) -> int:
+    """Anti-join ``ids`` out of a bucketed index table through the
+    bucketed-table replace protocol, keeping its bucket spec; returns
+    the removed-row count, 0 when no index exists."""
+    from ..operators.bucketing import (
+        recover_bucketed_table,
+        replace_bucketed_table,
+    )
+
+    if not index_table or recover_bucketed_table(spark, index_table) == "absent":
+        return 0
+    cur = spark.table(index_table)
+    before = cur.count()
+    replace_bucketed_table(
+        spark, cur.join(ids, key_col, "left_anti"), index_table,
+        bucket_col, n_buckets, [bucket_col],
+    )
+    return before - spark.table(index_table).count()
 
 
 def forget_documents(
@@ -707,62 +667,29 @@ def forget_documents(
     is a silent privacy leak).
 
     ``forget_ids`` is a list of ids or a 1-column DataFrame. Parquet
-    surfaces rewrite via anti-join → staged sibling write → atomic
-    rename swap (:func:`_staged_parquet_swap`) — a crash mid-forget
-    always leaves a complete on-disk copy, never an empty sink; the
-    index table rewrites through a staged ``saveAsTable`` + ``ALTER
-    TABLE RENAME``, preserving the bucket spec so post-forget intake
-    batches still join shuffle-free. At 100 TB swap the sink rewrites
-    for Delta DELETE (file-level rewrite of only affected files); the
-    index rewrite stays bucket-preserving either way.
+    surfaces rewrite via anti-join →
+    :func:`~dataingestionframework_spark.session.commit_store` (staged
+    write + rename rotation; a crash mid-forget is repaired to the old
+    or the new image by ``recover_store``, never an empty sink); the
+    index table rewrites through
+    :func:`~dataingestionframework_spark.operators.bucketing.replace_bucketed_table`,
+    preserving the bucket spec so post-forget intake batches still join
+    shuffle-free. At 100 TB swap the sink rewrites for Delta DELETE
+    (file-level rewrite of only affected files); the index rewrite
+    stays bucket-preserving either way.
 
     Returns per-surface removed-row counts.
     """
-    from ..operators.bucketing import drop_table_and_location
-
-    if isinstance(forget_ids, (list, tuple)):
-        ids = spark.createDataFrame(
-            [(int(i),) for i in forget_ids], f"{id_col} long"
-        )
-    else:
-        ids = forget_ids.select(id_col)
-    ids = ids.localCheckpoint()
-    removed: dict[str, int] = {}
-
-    for label, path in (("sink", sink_path), ("dropped", sink_path.rstrip("/") + "_dropped")):
-        # recovery probe first (heals a crashed prior swap), then a
-        # bare read so real errors propagate instead of reporting 0
-        if not _recover_or_probe_parquet(spark, path):
-            removed[label] = 0
-            continue
-        cur = spark.read.parquet(path)
-        before = cur.count()
-        kept = cur.join(ids, id_col, "left_anti")
-        removed[label] = before - _staged_parquet_swap(spark, kept, path)
-
-    if index_table and _recover_or_probe_index(spark, index_table):
-        cur = spark.table(index_table)
-        before = cur.count()
-        kept = cur.join(ids, id_col, "left_anti")
-        staged, old = f"{index_table}__staged", f"{index_table}__old"
-        drop_table_and_location(spark, staged)
-        drop_table_and_location(spark, old)
-        (
-            kept.write.mode("overwrite")
-            .bucketBy(n_buckets, "bucket_key")
-            .sortBy("bucket_key")
-            .saveAsTable(staged)
-        )
-        # rename-aside swap: at every instant a complete copy exists
-        # under SOME name, and _recover_or_probe_index heals the
-        # rename1->rename2 window on the next call
-        spark.sql(f"ALTER TABLE {index_table} RENAME TO {old}")
-        spark.sql(f"ALTER TABLE {staged} RENAME TO {index_table}")
-        drop_table_and_location(spark, old)
-        removed["index"] = before - spark.table(index_table).count()
-    else:
-        removed["index"] = 0
-    return removed
+    ids = _forget_ids(spark, forget_ids, id_col)
+    return {
+        "sink": _forget_in_store(spark, ids, sink_path, id_col),
+        "dropped": _forget_in_store(
+            spark, ids, sink_path.rstrip("/") + "_dropped", id_col
+        ),
+        "index": _forget_in_index(
+            spark, ids, index_table, id_col, "bucket_key", n_buckets
+        ),
+    }
 
 
 def forget_vectors(
@@ -781,53 +708,20 @@ def forget_vectors(
     a forgotten embedding is admitted — index residue that still blocks
     would leak that the vector once existed.
 
-    The sink rewrites via staged write + atomic rename
-    (:func:`_staged_parquet_swap`); the index through a staged
-    ``saveAsTable`` + rename, preserving ``bucketBy(n_buckets,
+    Same two commit protocols as :func:`forget_documents`: the sink
+    through ``commit_store``, the index through
+    ``replace_bucketed_table``, preserving ``bucketBy(n_buckets,
     ivf_cell)`` so post-forget intake batches keep their shuffle-free
     probe join. Returns per-surface removed-row counts.
     """
-    from ..operators.bucketing import drop_table_and_location
-
-    if isinstance(forget_ids, (list, tuple)):
-        ids = spark.createDataFrame(
-            [(int(i),) for i in forget_ids], f"{id_col} long"
-        )
-    else:
-        ids = forget_ids.select(id_col)
-    ids = ids.localCheckpoint()
-    removed: dict[str, int] = {}
-
-    if not _recover_or_probe_parquet(spark, sink_path):
-        removed["sink"] = 0
-    else:
-        cur = spark.read.parquet(sink_path)
-        before = cur.count()
-        kept = cur.join(ids, id_col, "left_anti")
-        removed["sink"] = before - _staged_parquet_swap(spark, kept, sink_path)
-
-    if index_table and _recover_or_probe_index(spark, index_table):
-        cur = spark.table(index_table)
-        before = cur.count()
-        kept = cur.join(
-            ids.select(F.col(id_col).alias("right_id")), "right_id", "left_anti"
-        )
-        staged, old = f"{index_table}__staged", f"{index_table}__old"
-        drop_table_and_location(spark, staged)
-        drop_table_and_location(spark, old)
-        (
-            kept.write.mode("overwrite")
-            .bucketBy(n_buckets, "ivf_cell")
-            .sortBy("ivf_cell")
-            .saveAsTable(staged)
-        )
-        spark.sql(f"ALTER TABLE {index_table} RENAME TO {old}")
-        spark.sql(f"ALTER TABLE {staged} RENAME TO {index_table}")
-        drop_table_and_location(spark, old)
-        removed["index"] = before - spark.table(index_table).count()
-    else:
-        removed["index"] = 0
-    return removed
+    ids = _forget_ids(spark, forget_ids, id_col)
+    return {
+        "sink": _forget_in_store(spark, ids, sink_path, id_col),
+        "index": _forget_in_index(
+            spark, ids.select(F.col(id_col).alias("right_id")), index_table,
+            "right_id", "ivf_cell", n_buckets,
+        ),
+    }
 
 
 def corpus_stream_warc_intake(

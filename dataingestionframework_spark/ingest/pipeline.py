@@ -106,12 +106,9 @@ class IngestionPipeline:
             batch_df = batch_df.persist()
         persisted_out = None
         try:
-            # schema drift: one set-difference, spec evolves, mergeSchema write
-            new_cols = detect_new_columns(batch_df, spec)
-            if new_cols:
-                spec = evolve_spec(spec, new_cols)
-                self.log.write(spec.header_id, "SCHEMA_DRIFT",
-                               f"new columns: {','.join(new_cols)}", 1, batch_id)
+            # schema drift is settled before a batch gets here: run_batch
+            # evolves the spec from its source sniff, and the stream
+            # handler aborts the epoch in _check_stream_drift
 
             # corrupt gate → quarantine + structured failure
             n_corrupt = 0
@@ -226,7 +223,6 @@ class IngestionPipeline:
         bounded: bool = True,
         processing_time: str = "0.5 seconds",
         timeout_s: int | None = None,
-        detect_drift: bool = True,
     ):
         """Streaming ingest via ``foreachBatch``.
 
@@ -248,8 +244,7 @@ class IngestionPipeline:
         def handle(batch_df: DataFrame, epoch_id: int) -> None:
             if epoch_id <= self._last_committed_epoch(spec.header_id):
                 return  # replayed epoch — already landed
-            if detect_drift:
-                self._check_stream_drift(batch_df, spec)
+            self._check_stream_drift(batch_df, spec)
             batch_id = self._next_batch_id(spec)
             self.process_batch(batch_df, spec, target, batch_id)
             self.log.write(spec.header_id, "EPOCH_COMMIT", str(epoch_id), 1,
@@ -271,8 +266,7 @@ class IngestionPipeline:
                     evolved = self._evolved_from_store(spec)
                     self.log.write(spec.header_id, "RESTART",
                                    "stream restart after schema drift", 1)
-                    return self.run_stream(evolved, bounded, processing_time, timeout_s,
-                                           detect_drift=detect_drift)
+                    return self.run_stream(evolved, bounded, processing_time, timeout_s)
                 raise
             self.log.write(spec.header_id, "END", "succeeded", 2)
             return q

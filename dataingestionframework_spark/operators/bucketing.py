@@ -13,6 +13,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# rotation names of replace_bucketed_table
+_STAGED_SUFFIX = "__staged"
+_OLD_SUFFIX = "__old"
+
 
 def drop_table_and_location(spark: SparkSession, table_name: str) -> None:
     """DROP TABLE IF EXISTS *and* remove its default-warehouse
@@ -51,6 +55,66 @@ def write_bucketed(
     w.saveAsTable(table_name)
 
 
+def _rename_table(spark: SparkSession, src: str, dst: str) -> None:
+    spark.sql(f"ALTER TABLE {src} RENAME TO {dst}")
+
+
+def recover_bucketed_table(spark: SparkSession, table_name: str) -> str:
+    """Complete or roll back an interrupted :func:`replace_bucketed_table`
+    — the catalog twin of :func:`~dataingestionframework_spark.session.
+    recover_store`. Idempotent; assumes a single writer.
+
+    States (table / ``__staged`` / ``__old``) and outcomes:
+    - table present → leftover staged/old are debris from a crash
+      before the first rename or after the commit point; drop them
+      → ``"ok"``
+    - table absent, staged present → the crash hit between the two
+      renames (a catalog entry for staged exists only once its data is
+      fully written); promote staged → ``"promoted"``
+    - table absent, old present → restore old → ``"rolled_back"``
+    - nothing present → ``"absent"``
+    """
+    staged, old = table_name + _STAGED_SUFFIX, table_name + _OLD_SUFFIX
+    exists = spark.catalog.tableExists
+    if exists(table_name):
+        drop_table_and_location(spark, staged)
+        drop_table_and_location(spark, old)
+        return "ok"
+    if exists(staged):
+        _rename_table(spark, staged, table_name)
+        drop_table_and_location(spark, old)
+        return "promoted"
+    if exists(old):
+        _rename_table(spark, old, table_name)
+        return "rolled_back"
+    return "absent"
+
+
+def replace_bucketed_table(
+    spark: SparkSession, df: DataFrame, table_name: str, bucket_col: str,
+    n_buckets: int = 16, sort_cols: list[str] | None = None,
+) -> None:
+    """Replace the existing bucketed catalog table ``table_name`` with
+    ``df``'s rows under the same bucket spec, so a crash at any step
+    leaves one complete copy under SOME name and
+    :func:`recover_bucketed_table` restores either the old or the new
+    image, never a mix or nothing.
+
+    ``df`` is written in full to ``<name>__staged`` first (it may
+    still read the live table), then the names rotate: live →
+    ``<name>__old``, staged → live; the second rename is the commit
+    point, and the old copy is dropped last.
+    """
+    staged, old = table_name + _STAGED_SUFFIX, table_name + _OLD_SUFFIX
+    drop_table_and_location(spark, staged)
+    drop_table_and_location(spark, old)
+    write_bucketed(df, staged, bucket_col, n_buckets, sort_cols)
+    _rename_table(spark, table_name, old)
+    _rename_table(spark, staged, table_name)
+    drop_table_and_location(spark, old)
+    spark.catalog.refreshTable(table_name)
+
+
 def compact_bucketed_table(
     spark: SparkSession, table_name: str, n_buckets: int, bucket_col: str,
     sort_cols: list[str] | None = None,
@@ -60,17 +124,14 @@ def compact_bucketed_table(
     refresh) adds one file per bucket per writer, and after thousands
     of batches the scan-side cost is file-open overhead, not bytes.
 
-    Rewrites the full table once through a staging table with the SAME
-    bucket spec (one file per bucket afterwards), then swaps names via
-    the catalog. Bucket layout — and therefore every downstream
-    shuffle-elision guarantee — is preserved. The swap is DROP + RENAME,
-    two catalog operations that are not atomic together: this is a
-    single-writer maintenance op, and concurrent readers can observe a
-    brief window where the table name resolves to nothing (never to a
-    half-written table). If the process dies inside that window the
-    data survives under the ``<name>__compact`` staging table — recovery
-    is a manual ``ALTER TABLE ... RENAME``. For an old-or-new guarantee
-    use ManagedTable's pointer-swap commit protocol instead.
+    Rewrites the full table once with the SAME bucket spec (one file
+    per bucket afterwards) through :func:`replace_bucketed_table`, so
+    bucket layout — and therefore every downstream shuffle-elision
+    guarantee — is preserved, and a crash mid-compaction is repaired
+    to the old or the compacted image by :func:`recover_bucketed_table`
+    (which this runs first). Single-writer maintenance op: concurrent
+    readers can briefly see the name resolve to nothing between the
+    two renames (never to a half-written table).
 
     Returns (files_before, files_after).
     """
@@ -93,9 +154,8 @@ def compact_bucketed_table(
             if not f.startswith(("_", "."))
         )
 
+    recover_bucketed_table(spark, table_name)
     before = _count_files(table_name)
-    staging = f"{table_name}__compact"
-    drop_table_and_location(spark, staging)
     # Force the bucket-aligned scan: each task reads exactly one
     # bucket's files and writes them back as ONE file — a shuffle-free
     # compaction. Without this, autoBucketedScan reads plain byte
@@ -107,17 +167,12 @@ def compact_bucketed_table(
     prev = spark.conf.get(conf_key)
     spark.conf.set(conf_key, "false")
     try:
-        w = spark.table(table_name).write.mode("overwrite").bucketBy(
-            n_buckets, bucket_col
+        replace_bucketed_table(
+            spark, spark.table(table_name), table_name, bucket_col,
+            n_buckets, sort_cols,
         )
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.saveAsTable(staging)
     finally:
         spark.conf.set(conf_key, prev)
-    drop_table_and_location(spark, table_name)
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {table_name}")
-    spark.catalog.refreshTable(table_name)
     return before, _count_files(table_name)
 
 

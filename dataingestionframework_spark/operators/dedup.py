@@ -331,12 +331,6 @@ def update_lsh_index_bucketed(
     )
     pairs = within if cross is None else cross.union(within)
     pairs = pairs.filter(F.col("id_a") != F.col("id_b")).distinct().cache()
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _trace = _os.environ.get("DIF_PHASE_STDERR")
-    _t0 = _time.perf_counter()
     # the candidate frame must be FULLY materialized before the append
     # grows the index (self-pair safety: a later scan of the lazy plan
     # would see the batch's own band rows). ``consume`` lets the caller
@@ -351,10 +345,6 @@ def update_lsh_index_bucketed(
     else:
         pairs.count()  # materialize BEFORE the index grows
         out = pairs
-    if _trace:
-        _t1 = _time.perf_counter()
-        print(f"# lsh_bucketed candidates: {_t1 - _t0:.3f}s", file=_sys.stderr)
-        _t0 = _t1
     (
         # repartition by the bucket column first: a bucketed write emits
         # one file per (task, bucket-present) pair, so writing from the
@@ -370,11 +360,6 @@ def update_lsh_index_bucketed(
         .sortBy("bucket_key")
         .saveAsTable(table_name)
     )
-    if _trace:
-        print(
-            f"# lsh_bucketed append: {_time.perf_counter() - _t0:.3f}s",
-            file=_sys.stderr,
-        )
     bnew.unpersist()
     if consume is not None:
         pairs.unpersist()

@@ -29,15 +29,6 @@ MAGIC = {
 }
 
 
-def sniff_mime(payload: bytes | None) -> str | None:
-    if payload is None:
-        return None
-    for magic, mime in MAGIC.items():
-        if payload[: len(magic)] == magic:
-            return mime
-    return "application/octet-stream"
-
-
 def with_binary_metadata(df: DataFrame, col: str) -> DataFrame:
     """Add size/hash/mime metadata columns for a binary payload column.
 

@@ -750,7 +750,7 @@ def psi_bucket_merge_into_store(
 
     Pass the foreachBatch epoch id as ``batch_id``: foreachBatch is
     at-least-once, and an additive merge double-counts a redelivered
-    batch — the epoch sidecar (:func:`~dataingestionframework_spark.
+    batch — the in-store epoch marker (:func:`~dataingestionframework_spark.
     session.store_epoch`) makes retries no-ops so the drained store
     truly equals the one-shot counts.
     """

@@ -1679,7 +1679,7 @@ def kmeans_stats_merge_into_store(
     happens once, in :func:`kmeans_from_stats`.
 
     Pass the foreachBatch epoch id as ``batch_id`` so an at-least-once
-    redelivery merges as a no-op (epoch sidecar, see
+    redelivery merges as a no-op (in-store epoch marker, see
     :func:`~dataingestionframework_spark.session.store_epoch`).
     """
     from ..session import commit_store, store_epoch

@@ -116,7 +116,7 @@ def cms_merge_into_store(
     drained store equals the one-shot batch sketch.
 
     Pass the foreachBatch epoch id as ``batch_id`` so an at-least-once
-    redelivery merges as a no-op (epoch sidecar, see
+    redelivery merges as a no-op (in-store epoch marker, see
     :func:`~dataingestionframework_spark.session.store_epoch`).
     """
     from ..session import commit_store, path_exists, store_epoch

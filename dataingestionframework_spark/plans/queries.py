@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import tune
-from .tables import load
+from .tables import load, register_test_tables
 
 
 def _t(spark, sf_dir):
@@ -1839,14 +1839,11 @@ def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sql_text_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL-text front door (reference drives everything via SQL
-    strings): q1 expressed through ``sql.run`` over registered views —
+    strings): q1 expressed through ``spark.sql`` over registered views —
     Catalyst produces the identical plan to the DataFrame form."""
-    from .. import sql as sqlmod
-
     tune(spark)
-    sqlmod.register_test_tables(spark, sf_dir)
-    return sqlmod.run(
-        spark,
+    register_test_tables(spark, sf_dir)
+    return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                round(sum(l_quantity), 2)  AS sum_qty,
@@ -2245,12 +2242,9 @@ def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (beyond rollup/cube): exactly two chosen
     grouping combinations in one shuffle — SQL text because the
     DataFrame API exposes only rollup/cube."""
-    from .. import sql as sqlmod
-
     tune(spark)
-    sqlmod.register_test_tables(spark, sf_dir)
-    return sqlmod.run(
-        spark,
+    register_test_tables(spark, sf_dir)
+    return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                count(*) AS n,
@@ -4443,12 +4437,9 @@ def recursive_cte_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier — frontier size, not corpus size, bounds the iteration
     state, the same shape as BOM/org-chart walks at scale. DuckDB runs
     the identical recursion."""
-    from .. import sql as sqlmod
-
     tune(spark)
-    sqlmod.register_test_tables(spark, sf_dir)
-    return sqlmod.run(
-        spark,
+    register_test_tables(spark, sf_dir)
+    return spark.sql(
         """
         WITH RECURSIVE h(p_partkey, root, depth) AS (
           SELECT p_partkey, p_partkey, 0 FROM part WHERE p_partkey < 10
@@ -4493,12 +4484,9 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     syntax, so the oracle is nearly verbatim). No ORDER BY: the gate
     compare is order-insensitive and an unbounded global sort is a
     plan-audit anti-pattern."""
-    from .. import sql as sqlmod
-
     tune(spark)
-    sqlmod.register_test_tables(spark, sf_dir)
-    return sqlmod.run(
-        spark,
+    register_test_tables(spark, sf_dir)
+    return spark.sql(
         """
         SELECT o_orderpriority, o_orderstatus,
                count(*)                   AS n,
@@ -4514,12 +4502,9 @@ def sql_pipe_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL pipe syntax (Spark 4) front door: TPC-H Q6 predicates
     grouped by return flag, written as a |> chain — same Catalyst plan
     as the nested form, proving the front door is syntax-deep only."""
-    from .. import sql as sqlmod
-
     tune(spark)
-    sqlmod.register_test_tables(spark, sf_dir)
-    return sqlmod.run(
-        spark,
+    register_test_tables(spark, sf_dir)
+    return spark.sql(
         """
         FROM lineitem
         |> WHERE l_shipdate >= TIMESTAMP '1996-01-01'

@@ -27,6 +27,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _tz_normalize(spark.read.parquet(path))
 
 
+def register_test_tables(spark: SparkSession, sf_dir: str) -> None:
+    """Register every test table as a temp view for the SQL-text
+    queries — names are bound through the view catalog, not
+    interpolated into query strings."""
+    for name in TABLES:
+        load(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
 def _tz_normalize(df: DataFrame) -> DataFrame:
     """Cast TIMESTAMP_NTZ columns to TIMESTAMP. Parquet writers vary in
     whether they mark timestamps UTC-adjusted; downstream operators

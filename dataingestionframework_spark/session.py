@@ -174,15 +174,6 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-# driver-side fast path for the epoch marker: foreachBatch bodies run
-# on the driver, so within one process the last-merged epoch is a dict
-# lookup; the file is only read after a restart and only written when
-# the epoch advances. Keyed by the NORMALIZED (rstrip'd) store path —
-# round-9 verdict item 2: keying on the raw string let two spellings
-# of one store ("s" and "s/") read distinct cache entries against one
-# marker file.
-_EPOCH_CACHE: dict[str, int] = {}
-
 # in-store marker files. "_"-prefixed names are invisible to Spark's
 # parquet reader, pyarrow dataset discovery, and DuckDB's *.parquet
 # glob, so they can live INSIDE the store directory — which is what
@@ -195,12 +186,6 @@ _BACKUP_SUFFIX = "__old"
 
 def _norm_store(store_path: str) -> str:
     return store_path.rstrip("/")
-
-
-def _epoch_file(store_path: str) -> str:
-    # legacy round-9 location (outside the store); still READ for
-    # stores written before the in-store marker existed
-    return _norm_store(store_path) + "__epoch"
 
 
 def _fs(spark: SparkSession, path: str):
@@ -285,8 +270,8 @@ def store_epoch(spark: SparkSession, store_path: str) -> int:
     ``_epoch`` text file INSIDE the store directory (invisible to
     parquet readers), written by :func:`commit_store` in the same
     directory rename that commits the data — data and epoch cannot
-    disagree. A legacy round-9 ``<store>__epoch`` sidecar is still
-    honored for stores that predate the in-store marker.
+    disagree. Read from disk on every call, so a dropped-and-recreated
+    store can never inherit a stale epoch.
 
     foreachBatch is at-least-once: a failed/retried trigger redelivers
     the SAME epoch id, and ids are monotonically increasing within one
@@ -294,47 +279,14 @@ def store_epoch(spark: SparkSession, store_path: str) -> int:
     exactly the dedup the Structured Streaming guide prescribes for
     idempotent sinks. One store is therefore coupled to ONE checkpoint
     lineage; recreate the store through :func:`drop_store` (never a
-    bare directory delete) when starting a fresh checkpoint, so the
-    cache and any legacy sidecar go with it.
-
-    A missing store reports ``-1`` and drops any cached entry — a
-    dropped-and-recreated store can never inherit a stale epoch from
-    cache or sidecar (round-9 ADVICE: that inheritance silently
-    skipped every batch of the new lineage).
+    bare directory delete) when starting a fresh checkpoint.
     """
     norm = _norm_store(store_path)
     recover_store(spark, norm)  # finish any interrupted rotation first
-    fs, jstore = _fs(spark, norm)
-    if not fs.exists(jstore):
-        _EPOCH_CACHE.pop(norm, None)
-        return -1
-    cached = _EPOCH_CACHE.get(norm)
-    if cached is not None:
-        return cached
     line = _read_text_file(spark, norm + "/" + _EPOCH_NAME)
-    if line is None:
-        line = _read_text_file(spark, _epoch_file(norm))  # legacy sidecar
     if line is None or not line.strip():
         return -1
-    epoch = int(line.strip())
-    _EPOCH_CACHE[norm] = epoch
-    return epoch
-
-
-def record_store_epoch(spark: SparkSession, store_path: str, batch_id: int) -> None:
-    """Record ``batch_id`` as merged (see :func:`store_epoch`) for
-    writers that manage their own data write. Written into the store
-    directory when it exists (so dropping the store drops the epoch),
-    else to the legacy sidecar. NOT atomic with the caller's data
-    write — prefer :func:`commit_store`, which commits both in one
-    rename."""
-    norm = _norm_store(store_path)
-    fs, jstore = _fs(spark, norm)
-    target = (
-        norm + "/" + _EPOCH_NAME if fs.exists(jstore) else _epoch_file(norm)
-    )
-    _write_text_file(spark, target, f"{int(batch_id)}\n")
-    _EPOCH_CACHE[norm] = int(batch_id)
+    return int(line.strip())
 
 
 def commit_store(df, store_path: str, batch_id: int | None = None) -> None:
@@ -379,26 +331,18 @@ def commit_store(df, store_path: str, batch_id: int | None = None) -> None:
         raise IOError(f"commit_store: rename {staging} -> {norm} failed")
     if fs.exists(jbackup):
         fs.delete(jbackup, True)
-    if epoch >= 0:
-        _EPOCH_CACHE[norm] = epoch
-    else:
-        _EPOCH_CACHE.pop(norm, None)
 
 
 def drop_store(spark: SparkSession, store_path: str) -> None:
-    """Drop a store and ALL its bookkeeping: directory, staging/backup
-    rotation dirs, legacy epoch sidecar, and the in-process epoch
-    cache entry. The required teardown when retiring a store or
-    restarting its stream under a fresh checkpoint — a bare directory
-    delete leaves the sidecar/cache behind, and a recreated store
-    would then silently skip every epoch <= the stale value."""
+    """Drop a store together with its staging/backup rotation dirs.
+    The required teardown when retiring a store or restarting its
+    stream under a fresh checkpoint — a bare directory delete can leave
+    a ``__old`` backup behind, which :func:`recover_store` would roll
+    back into place with its stale epoch, and the recreated store would
+    then silently skip every epoch <= that value."""
     norm = _norm_store(store_path)
-    fs, jstore = _fs(spark, norm)
+    fs, _ = _fs(spark, norm)
     for p in (norm, norm + _STAGING_SUFFIX, norm + _BACKUP_SUFFIX):
         jp = _jpath(spark, p)
         if fs.exists(jp):
             fs.delete(jp, True)
-    jside = _jpath(spark, _epoch_file(norm))
-    if fs.exists(jside):
-        fs.delete(jside, False)
-    _EPOCH_CACHE.pop(norm, None)

@@ -97,10 +97,8 @@ def test_store_epoch_path_spellings_share_one_entry(spark, tmp_path):
     store = str(tmp_path / "cms")
     cms_merge_into_store(_mk_df(spark), "user_id", store, batch_id=3)
     assert S.store_epoch(spark, store) == 3
-    assert S.store_epoch(spark, store + "/") == 3  # same cache entry
-    S._EPOCH_CACHE.clear()
+    assert S.store_epoch(spark, store + "/") == 3  # same store
     assert S.store_epoch(spark, store + "/") == 3  # same durable marker
-    assert list(S._EPOCH_CACHE) == [store]  # keyed on the normalized path
 
 
 def test_store_epoch_missing_store_is_minus_one_and_uncached(spark, tmp_path):
@@ -117,13 +115,9 @@ def test_store_epoch_missing_store_is_minus_one_and_uncached(spark, tmp_path):
     store = str(tmp_path / "cms")
     cms_merge_into_store(_mk_df(spark), "user_id", store, batch_id=7)
     assert S.store_epoch(spark, store) == 7
-    # legacy-layout store: epoch in the old external sidecar only
-    with open(store + "__epoch", "w") as f:
-        f.write("7\n")
 
     shutil.rmtree(store)  # bare delete (the discouraged path)
     assert S.store_epoch(spark, store) == -1  # store gone -> no epoch
-    assert store not in S._EPOCH_CACHE
 
     # a fresh lineage writing epoch 0 must MERGE, not be skipped
     cms_merge_into_store(_mk_df(spark), "user_id", store, batch_id=0)
@@ -142,13 +136,10 @@ def test_drop_store_clears_all_bookkeeping(spark, tmp_path):
 
     store = str(tmp_path / "cms")
     cms_merge_into_store(_mk_df(spark), "user_id", store, batch_id=5)
-    with open(store + "__epoch", "w") as f:  # stale legacy sidecar too
-        f.write("5\n")
     S.drop_store(spark, store)
     assert not os.path.exists(store)
     assert not os.path.exists(store + "__epoch")
     assert not os.path.exists(store + "__staging")
-    assert store not in S._EPOCH_CACHE
     assert S.store_epoch(spark, store) == -1
 
 
@@ -177,7 +168,6 @@ def test_commit_store_recovers_from_kill_between_writes(spark, tmp_path):
     # don't poison the read-back
     S._write_text_file(spark, os.path.join(staging, "_epoch"), "1\n")
     S._write_text_file(spark, os.path.join(staging, "_GRAFT_COMMITTED"), "1\n")
-    S._EPOCH_CACHE.clear()
     # crash state A: store intact + complete staging -> old store wins,
     # debris removed, epoch stays 0
     assert S.store_epoch(spark, store) == 0
@@ -190,7 +180,6 @@ def test_commit_store_recovers_from_kill_between_writes(spark, tmp_path):
     S._write_text_file(spark, os.path.join(staging, "_epoch"), "1\n")
     S._write_text_file(spark, os.path.join(staging, "_GRAFT_COMMITTED"), "1\n")
     os.rename(store, store + "__old")
-    S._EPOCH_CACHE.clear()
     assert S.store_epoch(spark, store) == 1  # promoted atomically
     assert os.path.exists(store)
     assert not os.path.exists(store + "__old")
@@ -205,7 +194,6 @@ def test_commit_store_recovers_from_kill_between_writes(spark, tmp_path):
         if os.path.exists(cp):
             os.remove(cp)
     os.rename(store, store + "__old")
-    S._EPOCH_CACHE.clear()
     assert S.store_epoch(spark, store) == 1  # rolled back, not promoted
     assert os.path.exists(store)
     assert not os.path.exists(staging)

@@ -152,22 +152,28 @@ def test_margin_bitext_mutual_requires_backward_shortlist(spark):
 
 
 def test_staged_parquet_swap_no_residue_and_correct(spark, tmp_path):
-    """The RTBF staged swap: rewrites the path with the kept rows, the
-    read side can stay lazy over the original files, and neither the
-    .__staged__ nor .__bak__ sibling survives."""
+    """The RTBF parquet swap is the store commit protocol: it rewrites
+    the path with the kept rows, the read side can stay lazy over the
+    original files, the epoch is carried forward, and neither the
+    __staging nor __old rotation dir survives."""
     import os
 
-    from dataingestionframework_spark.ingest.corpus import _staged_parquet_swap
+    from dataingestionframework_spark.session import (
+        commit_store,
+        recover_store,
+        store_epoch,
+    )
 
     p = str(tmp_path / "sink")
-    spark.range(100).withColumnRenamed("id", "doc_id").write.parquet(p)
+    commit_store(spark.range(100).withColumnRenamed("id", "doc_id"), p, 4)
     cur = spark.read.parquet(p)
     kept = cur.filter("doc_id % 2 = 0")  # lazy over the path being swapped
-    n = _staged_parquet_swap(spark, kept, p)
-    assert n == 50
+    commit_store(kept, p)
     assert spark.read.parquet(p).count() == 50
-    assert not os.path.exists(p + ".__staged__")
-    assert not os.path.exists(p + ".__bak__")
+    assert store_epoch(spark, p) == 4
+    assert recover_store(spark, p) == "ok"
+    assert not os.path.exists(p + "__staging")
+    assert not os.path.exists(p + "__old")
 
 
 def test_avro_format_roundtrip_leg(spark, tmp_path):

@@ -722,35 +722,37 @@ class TestLangIdNgram:
 
 
 def test_staged_swap_crash_window_recovers(spark, tmp_root):
-    """Crash between rename(path→bak) and rename(staged→path) leaves
-    the sink name empty with the data under a sibling. The recovery
-    probe must promote the surviving copy (staged over bak) so the
-    next forget heals instead of failing or treating the sink as
-    absent."""
-    from dataingestionframework_spark.ingest.corpus import (
-        _recover_or_probe_parquet,
-        forget_documents,
+    """Crash between commit_store's two renames (store → __old,
+    __staging → store) leaves the sink name empty with the data under
+    siblings. recover_store must promote the complete staged image
+    (it carries the commit mark) so the next forget heals instead of
+    failing or treating the sink as absent."""
+    from dataingestionframework_spark.ingest.corpus import forget_documents
+    from dataingestionframework_spark.session import (
+        _write_text_file,
+        recover_store,
     )
 
     sink = f"{tmp_root}/sink"
     spark.createDataFrame(
         [(i, f"doc {i}") for i in range(6)], "doc_id long, text string"
     ).write.parquet(sink)
-    # simulate the crash window: post-forget image staged, sink renamed
-    # aside, promotion never happened
+    # simulate the crash window: post-forget image staged and marked
+    # committed, sink renamed aside, promotion never happened
     sc = spark.sparkContext
     jpath = sc._jvm.org.apache.hadoop.fs.Path
     fs = jpath(sink).getFileSystem(sc._jsc.hadoopConfiguration())
-    spark.read.parquet(sink).filter("doc_id <> 3").write.parquet(sink + ".__staged__")
-    assert fs.rename(jpath(sink), jpath(sink + ".__bak__"))
+    spark.read.parquet(sink).filter("doc_id <> 3").write.parquet(sink + "__staging")
+    _write_text_file(spark, sink + "__staging/_GRAFT_COMMITTED", "1\n")
+    assert fs.rename(jpath(sink), jpath(sink + "__old"))
     assert not fs.exists(jpath(sink))
 
-    assert _recover_or_probe_parquet(spark, sink)  # heals: staged wins
+    assert recover_store(spark, sink) == "promoted"  # heals: staged wins
     assert {r.doc_id for r in spark.read.parquet(sink).collect()} == {0, 1, 2, 4, 5}
     # and a real forget run right after the heal works end-to-end
     removed = forget_documents(spark, [0], sink)
     assert removed["sink"] == 1
-    assert not fs.exists(jpath(sink + ".__bak__"))
+    assert not fs.exists(jpath(sink + "__old"))
 
 
 def test_kmeans_stats_store_survives_transient_probe(spark, tmp_root):

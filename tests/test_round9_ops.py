@@ -223,9 +223,7 @@ def test_store_epoch_survives_driver_restart(spark, tmp_path):
     store = str(tmp_path / "cms")
     cms_merge_into_store(df, "user_id", store, batch_id=4)
     assert S.store_epoch(spark, store) == 4
-    S._EPOCH_CACHE.clear()  # "restart"
     assert S.store_epoch(spark, store) == 4  # read back from the file
-    S._EPOCH_CACHE.clear()
     cms_merge_into_store(df, "user_id", store, batch_id=4)  # redelivery
     keys = spark.createDataFrame([(2,)], "user_id long")
     est = cms_estimate(spark.read.parquet(store), keys, "user_id").collect()[0]
