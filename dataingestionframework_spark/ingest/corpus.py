@@ -370,8 +370,8 @@ def corpus_incremental_near_dup_intake(
         # superseded per-batch state: the sink/dropped appends are the
         # durable record, so the batch pins are never read again —
         # release them now instead of holding every batch's blocks
-        # until the periodic GC (guide §5; the candidate cache is
-        # released inside update_lsh_index_bucketed)
+        # until the periodic GC (guide §5; the band-row pin is released
+        # inside update_lsh_index_bucketed, which caches no candidates)
         release_checkpoint(drop)
         release_checkpoint(b)
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import jaccard, word_ngrams
+from ..session import release_checkpoint
 from .text import fingerprint
 
 # ---------------------------------------------------------------------------
@@ -124,7 +125,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n: int = 3,
     num_hashes: int = 64,
-    grams: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash signatures as ``num_hashes`` columns ``h0..h{k-1}``.
 
@@ -140,17 +140,13 @@ def minhash_signatures(
     high-``i`` positions collapse onto one gram and a single differing
     gram between two near-identical docs corrupts most of the
     signature — measured est≈0.03 on a true-Jaccard-0.97 pair.)
-
-    Pass ``grams`` — a caller-persisted (id, gram) table (distinct or
-    not: MinHash is a min, duplicates cannot change it) — to hash the
-    cached rows instead of re-exploding the corpus.
+    A row-local shape (per-doc ``transform``/``array_min``/``xxhash64``
+    over the gram array, no shuffle) was also rejected: its lambdas run
+    interpreted, 2.4× slower at 20k docs × 200 tokens (16.3 s vs 7.3 s).
     """
     from ..functions import exploded_word_ngrams
 
-    if grams is None:
-        grams = exploded_word_ngrams(df, text_col, id_col, n).select(id_col, "gram")
-    else:
-        grams = grams.select(id_col, "gram")
+    grams = exploded_word_ngrams(df, text_col, id_col, n).select(id_col, "gram")
     return grams.groupBy(id_col).agg(
         *[
             F.min(F.xxhash64("gram", F.lit(i))).alias(f"h{i}")
@@ -291,10 +287,10 @@ def update_lsh_index_bucketed(
 
     Returns distinct candidate pairs (id_a, id_b), id_a < id_b — cross
     (new × indexed) plus within-batch — then appends the batch's band
-    rows to the index table for future batches. With ``consume`` (a
-    function from the cached candidate frame to a MATERIALIZED result —
-    see the inline contract), returns ``consume``'s result instead and
-    releases the candidate cache.
+    rows to the index table for future batches; the band rows are
+    pinned once and released after the append. With ``consume`` (a
+    function from the lazy candidate frame to a MATERIALIZED result —
+    see the inline contract), returns ``consume``'s result instead.
 
     Session note: Spark's table-relation cache is per-session — a
     DIFFERENT session (e.g. the driver session while foreachBatch
@@ -302,11 +298,13 @@ def update_lsh_index_bucketed(
     before re-reading the index, or it sees the pre-append file list.
     """
     sig = minhash_signatures(new_docs, text_col, id_col, n, num_hashes)
+    # eager pin, not a lazy cache: a cache puts its own nested AQE plan
+    # and query stage under every reference in the consumer's plan
     bnew = (
         minhash_band_rows(sig, id_col, num_hashes, bands)
         .withColumn("bucket_key", F.xxhash64("band_id", "band_hash"))
         .select(id_col, "bucket_key")
-        .cache()
+        .localCheckpoint()
     )
     cross = None
     if spark.catalog.tableExists(table_name):
@@ -330,39 +328,35 @@ def update_lsh_index_bucketed(
         .select("id_a", "id_b")
     )
     pairs = within if cross is None else cross.union(within)
-    pairs = pairs.filter(F.col("id_a") != F.col("id_b")).distinct().cache()
+    pairs = pairs.filter(F.col("id_a") != F.col("id_b")).distinct()
     # the candidate frame must be FULLY materialized before the append
     # grows the index (self-pair safety: a later scan of the lazy plan
     # would see the batch's own band rows). ``consume`` lets the caller
-    # fuse its downstream action with that materialization — one job
-    # instead of count-then-consume — under the contract that it runs
-    # an action over the ENTIRE frame (a full-scan localCheckpoint /
-    # collect) before returning; its result is returned in place of
-    # ``pairs`` and the cache is released (nothing may read the lazy
-    # candidate plan after the append).
-    if consume is not None:
-        out = consume(pairs)
-    else:
-        pairs.count()  # materialize BEFORE the index grows
-        out = pairs
-    (
-        # repartition by the bucket column first: a bucketed write emits
-        # one file per (task, bucket-present) pair, so writing from the
-        # aggregate's ~core-count partitions appended ~500 tiny files
-        # PER BATCH (measured) — the accumulated index then pays
-        # listing/open cost on every later batch's scan (guide §6).
-        # Hash-repartitioning on bucket_key into n_buckets partitions
-        # uses the same Murmur3 pmod as the bucket assignment, so each
-        # task holds exactly one bucket: n_buckets files per append.
-        bnew.repartition(n_buckets, "bucket_key")
-        .write.mode("append")
-        .bucketBy(n_buckets, "bucket_key")
-        .sortBy("bucket_key")
-        .saveAsTable(table_name)
-    )
-    bnew.unpersist()
-    if consume is not None:
-        pairs.unpersist()
+    # fuse its downstream action with that materialization under the
+    # contract that it runs an action over the ENTIRE lazy frame (a
+    # full-scan localCheckpoint / collect) and returns a result that no
+    # longer reads it: nothing may read the candidate plan after the
+    # append, nor the band-row pin after its release. Without
+    # ``consume`` the pairs get their own pin for the same reasons.
+    try:
+        out = consume(pairs) if consume is not None else pairs.localCheckpoint()
+        (
+            # repartition by the bucket column first: a bucketed write emits
+            # one file per (task, bucket-present) pair, so writing from the
+            # aggregate's ~core-count partitions appended ~500 tiny files
+            # PER BATCH (measured) — the accumulated index then pays
+            # listing/open cost on every later batch's scan (guide §6).
+            # Hash-repartitioning on bucket_key into n_buckets partitions
+            # uses the same Murmur3 pmod as the bucket assignment, so each
+            # task holds exactly one bucket: n_buckets files per append.
+            bnew.repartition(n_buckets, "bucket_key")
+            .write.mode("append")
+            .bucketBy(n_buckets, "bucket_key")
+            .sortBy("bucket_key")
+            .saveAsTable(table_name)
+        )
+    finally:
+        release_checkpoint(bnew)  # the append is the band rows' last read
     return out
 
 

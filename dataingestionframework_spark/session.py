@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs we also re-assert on sessions we did not create
@@ -144,7 +145,8 @@ def release_checkpoint(df) -> bool:
     immediately. ONLY call on checkpoints nothing will read again:
     lineage is truncated, so a later read would fail rather than
     recompute. Returns False (and frees nothing) when the plan is not
-    a materialized LogicalRDD — safe on non-checkpointed frames.
+    a materialized LogicalRDD — safe on non-checkpointed frames — or on
+    a ``Py4JError`` (JVM internals moved; GC reclaims); others propagate.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
@@ -152,8 +154,8 @@ def release_checkpoint(df) -> bool:
             return False
         plan.rdd().unpersist(False)
         return True
-    except Exception:
-        return False  # internals moved or plan shape unexpected: GC reclaims
+    except Py4JError:
+        return False
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:

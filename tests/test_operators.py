@@ -581,6 +581,121 @@ def test_bucketed_lsh_index_no_exchange_on_index_side(spark, docs):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
+def _persistent_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _n_cached(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def _pin_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def test_bucketed_lsh_index_pins_band_rows_and_caches_nothing(spark, docs):
+    """update_lsh_index_bucketed pins the batch's band rows once,
+    releases that pin after the index append and leaves nothing in the
+    cache manager. Without ``consume`` the returned pairs are a pin of
+    their own: collectable after the band-row pin is gone, with no
+    InMemoryRelation in their plan. With ``consume`` the candidate
+    frame it receives is uncached, and only its result stays pinned.
+    Each call grows the index by exactly ``bands`` rows per new doc."""
+    from dataingestionframework_spark.operators.bucketing import (
+        drop_table_and_location,
+    )
+    from dataingestionframework_spark.operators.dedup import (
+        update_lsh_index_bucketed,
+    )
+    from dataingestionframework_spark.session import release_checkpoint
+
+    name = "dif_test_lsh_pins"
+    bands = 16
+    drop_table_and_location(spark, name)
+    try:
+        batch1 = docs.filter(F.col("doc_id") < 40)
+        update_lsh_index_bucketed(batch1, spark, name, bands=bands)
+        n_index = batch1.count() * bands
+        assert spark.table(name).count() == n_index
+
+        base = docs.filter(F.col("doc_id") == 0).first().text
+        toks = base.split()
+        toks[len(toks) // 2] = "zzzchanged"
+        near = spark.createDataFrame(
+            [(7000, " ".join(toks), "en", "dup", len(base))], docs.schema
+        )
+        batch2 = docs.filter(
+            (F.col("doc_id") >= 40) & (F.col("doc_id") < 60)
+        ).union(near)
+        before, cached = _persistent_ids(spark), _n_cached(spark)
+        p2 = update_lsh_index_bucketed(batch2, spark, name, bands=bands)
+        n_index += batch2.count() * bands
+        assert spark.table(name).count() == n_index
+        assert _persistent_ids(spark) - before <= {_pin_id(p2)}
+        assert _n_cached(spark) <= cached
+        first = sorted((r.id_a, r.id_b) for r in p2.collect())
+        assert (0, 7000) in first
+        assert sorted((r.id_a, r.id_b) for r in p2.collect()) == first
+        plan = p2._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan, plan
+        release_checkpoint(p2)
+
+        seen = {}
+
+        def consume(pairs):
+            seen["plan"] = pairs._jdf.queryExecution().optimizedPlan().toString()
+            return pairs.localCheckpoint()
+
+        batch3 = docs.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 80))
+        before, cached = _persistent_ids(spark), _n_cached(spark)
+        out = update_lsh_index_bucketed(
+            batch3, spark, name, bands=bands, consume=consume
+        )
+        assert "InMemoryRelation" not in seen["plan"], seen["plan"]
+        assert _persistent_ids(spark) - before <= {_pin_id(out)}
+        assert _n_cached(spark) <= cached
+        assert spark.table(name).count() == n_index + batch3.count() * bands
+        assert all(r.id_a < r.id_b for r in out.collect())
+        release_checkpoint(out)
+    finally:
+        drop_table_and_location(spark, name)
+
+
+def test_bucketed_lsh_index_bucket_keys_are_stable(spark):
+    """Bucket keys are the persisted index's format: an index written
+    by an earlier build must keep matching new batches, so the keys of
+    one fixed document are pinned here bit for bit."""
+    from dataingestionframework_spark.operators.bucketing import (
+        drop_table_and_location,
+    )
+    from dataingestionframework_spark.operators.dedup import (
+        update_lsh_index_bucketed,
+    )
+
+    name = "dif_test_lsh_keys"
+    drop_table_and_location(spark, name)
+    try:
+        d = spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog again"),
+             (2, "a completely different sentence about ingestion frameworks")],
+            "doc_id long, text string",
+        )
+        update_lsh_index_bucketed(d, spark, name)
+        rows = [(r.doc_id, r.bucket_key) for r in spark.table(name).collect()]
+        assert len(rows) == 32
+        assert sorted(k for i, k in rows if i == 1) == [
+            -8642945185535306836, -8178867964612385109, -7840206145034373915,
+            -7133922199412417531, -7108841817760907091, -5551507137828287492,
+            -4393950739379649864, -4287243569173222957, -2862202065374156608,
+            -2704875861562753907, -2174061546953136895, -101092434679223723,
+            2739248779630258427, 4724666593656778044, 6501505556664335113,
+            9098540411246082520,
+        ]
+        assert sum(k for _, k in rows) == -6385226772441742397
+    finally:
+        drop_table_and_location(spark, name)
+
+
 def test_lsh_hot_bucket_candidates_bounded(spark):
     """Boilerplate-heavy corpus: one band bucket ≫ others. With
     max_bucket_size set, hot buckets emit linear STAR pairs instead of

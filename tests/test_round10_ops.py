@@ -43,6 +43,26 @@ def test_release_checkpoint_frees_blocks(spark):
     assert release_checkpoint(spark.range(3)) is False
 
 
+def test_release_checkpoint_swallows_only_py4j_errors():
+    """A Py4JError (JVM internals moved) reads as "nothing to release";
+    any other failure propagates instead of silently returning False.
+    (True on a checkpoint, False on a plain frame: the test above.)"""
+    from py4j.protocol import Py4JError
+
+    from dataingestionframework_spark.session import release_checkpoint
+
+    class _Broken:
+        def __init__(self, exc):
+            self._jdf, self._exc = self, exc
+
+        def queryExecution(self):
+            raise self._exc
+
+    assert release_checkpoint(_Broken(Py4JError("moved"))) is False
+    with pytest.raises(RuntimeError):
+        release_checkpoint(_Broken(RuntimeError("boom")))
+
+
 def test_bfs_releases_superseded_checkpoints(spark):
     from dataingestionframework_spark.operators.graph import bfs_distances
 
