@@ -76,63 +76,6 @@ class CorpusPrepResult:
     report: DataFrame                     # stage, rows_in, rows_out
 
 
-def corpus_stream_clean(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    min_quality: float = 0.5,
-    watermark: str = "1 hour",
-    observe_prefix: str | None = None,
-) -> DataFrame:
-    """Streaming corpus intake: quality gate + exact-dedup within the
-    watermark, as one incremental plan (the streaming twin of
-    CorpusPrep's first two batch stages).
-
-    Dedup state is bounded by the watermark: one md5 fingerprint per
-    distinct document seen in the last ``watermark`` of event time —
-    the standard trade for unbounded streams (cross-window dups are
-    caught by the periodic batch near-dup sweep instead). Works on
-    batch frames too (dropDuplicates on the fingerprint).
-
-    With ``observe_prefix`` set, per-stage named metrics
-    (``<prefix>_input``: rows + mean quality, ``<prefix>_gated``:
-    surviving rows, ``<prefix>_out``: emitted rows) ride each
-    micro-batch's StreamingQueryProgress.observedMetrics — the funnel
-    report costs no extra pass or action at any scale (counters are
-    folded into the batch's own execution, exactly like CorpusPrep's
-    batch-side Observation taps).
-    """
-    from ..operators.text import fingerprint, quality_score
-
-    q = quality_score(F.col(text_col))
-    if observe_prefix:
-        stream = stream.observe(
-            f"{observe_prefix}_input",
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(q), 6).alias("mean_quality"),
-        )
-    gated = (
-        stream.withColumn("_q", q)
-        .filter(F.col("_q") >= min_quality)
-        .drop("_q")
-        .withColumn("_fp", fingerprint(F.col(text_col)))
-    )
-    if observe_prefix:
-        gated = gated.observe(
-            f"{observe_prefix}_gated", F.count(F.lit(1)).alias("n")
-        )
-    if stream.isStreaming:
-        out = gated.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            ["_fp"]
-        )
-    else:
-        out = gated.dropDuplicates(["_fp"])
-    out = out.drop("_fp")
-    if observe_prefix:
-        out = out.observe(f"{observe_prefix}_out", F.count(F.lit(1)).alias("n"))
-    return out
-
-
 def corpus_stream_prep(
     stream: DataFrame,
     spec: CorpusPrepSpec,
@@ -150,9 +93,10 @@ def corpus_stream_prep(
     Near-dup (LSH) and temperature-mix stages are deliberately batch-
     only: both need corpus-global state (band tables / group counts)
     that a watermark can't bound — at scale they run as the periodic
-    batch sweep over the accumulated sink (``CorpusPrep.run`` /
-    ``update_lsh_index``), the standard lambda split. Works on batch
-    frames too (same plan minus the watermark).
+    batch sweep over the accumulated sink (``CorpusPrep.run``) or the
+    incremental index (``update_lsh_index_bucketed``), the standard
+    lambda split. Works on batch frames too (same plan minus the
+    watermark).
 
     Returns the chunk stream ``(id, chunk_id, n_chunk_tokens, chunk)``
     (or clean docs if ``spec.chunk_size == 0``); append-mode safe.
@@ -199,6 +143,25 @@ def corpus_stream_prep(
     return cur
 
 
+def _read_landed(spark, paths: list[str], cols: list[str]) -> DataFrame | None:
+    """Union of ``cols`` over the parquet stores in ``paths`` that
+    exist; None when none does — what an intake's replay guard
+    anti-joins a batch against. A left-anti join needs no distinct.
+
+    Existence probe, not try/except: a transient read failure while a
+    store EXISTS must fail the batch (foreachBatch retries it), not
+    skip the guard and silently append duplicates.
+    """
+    from ..session import path_exists
+
+    landed = None
+    for path in paths:
+        if path_exists(spark, path):
+            part = spark.read.parquet(path).select(*cols)
+            landed = part if landed is None else landed.unionByName(part)
+    return landed
+
+
 def corpus_incremental_intake(
     stream: DataFrame,
     sink_path: str,
@@ -209,7 +172,7 @@ def corpus_incremental_intake(
     """Incremental corpus build with UNBOUNDED-horizon exact dedup:
     each micro-batch appends only fingerprint-new documents, anti-joined
     against the accumulated sink itself (vs the watermark-bounded state
-    of :func:`corpus_stream_clean`).
+    of :func:`corpus_stream_prep`).
 
     The fingerprint column ``_fp`` is persisted in the sink and IS the
     dedup index: the anti-join reads just that column (parquet column
@@ -234,13 +197,8 @@ def corpus_incremental_intake(
                 F.col("_q") >= min_quality
             ).drop("_q")
         b = b.withColumn("_fp", fingerprint(F.col(text_col))).dropDuplicates(["_fp"])
-        # existence probe, not a bare except: a transient sink-read
-        # failure must fail the batch (foreachBatch retries), not skip
-        # the anti-join and silently append duplicates
-        from ..session import path_exists
-
-        if path_exists(spark, sink_path):
-            seen = spark.read.parquet(sink_path).select("_fp").distinct()
+        seen = _read_landed(spark, [sink_path], ["_fp"])
+        if seen is not None:
             b = b.join(seen, "_fp", "left_anti")
         b.write.mode("append").parquet(sink_path)
 
@@ -305,24 +263,10 @@ def corpus_incremental_near_dup_intake(
 
     def handle(batch: DataFrame, _epoch: int) -> None:
         spark = batch.sparkSession
-
-        def _read_or_none(path: str) -> DataFrame | None:
-            # probe, not try/except: a transient read failure while the
-            # store EXISTS must retry the batch, not skip the replay
-            # guard and duplicate writes
-            from ..session import path_exists
-
-            if not path_exists(spark, path):
-                return None
-            return spark.read.parquet(path).select(id_col, text_col)
-
         b = batch.dropDuplicates([id_col])
-        seen = _read_or_none(sink_path)
-        gone = _read_or_none(dropped_path)
-        blockers = None
-        for part in (seen, gone):
-            if part is not None:
-                blockers = part if blockers is None else blockers.unionByName(part)
+        blockers = _read_landed(
+            spark, [sink_path, dropped_path], [id_col, text_col]
+        )
         if blockers is not None:
             b = b.join(blockers.select(id_col), id_col, "left_anti")
         # pin the batch image: b's lineage reads the sink/dropped stores
@@ -540,11 +484,8 @@ def embedding_incremental_ann_intake(
     def handle(batch: DataFrame, _epoch: int) -> None:
         spark = batch.sparkSession
         b = batch.dropDuplicates([id_col])
-        # probe, not try/except (see corpus_incremental_intake)
-        from ..session import path_exists
-
-        if path_exists(spark, sink_path):
-            seen = spark.read.parquet(sink_path).select(id_col)
+        seen = _read_landed(spark, [sink_path], [id_col])
+        if seen is not None:
             b = b.join(seen, id_col, "left_anti")
         b = b.localCheckpoint()
         assigned, _ = ivf_assign(b, vec_col=vec_col, centroids=centroids)
@@ -580,17 +521,13 @@ def embedding_incremental_ann_intake(
         )
         surv = b.join(drops, id_col, "left_anti")
         # the WHOLE batch joins the index (dropped ids included); only
-        # survivors reach the sink
-        writer = (
+        # survivors reach the sink. Append mode creates a missing table.
+        (
             batch_index.write.mode("append")
             .bucketBy(8, "ivf_cell")
             .sortBy("ivf_cell")
+            .saveAsTable(index_table)
         )
-        if not spark.catalog.tableExists(index_table):
-            writer = batch_index.write.mode("overwrite").bucketBy(
-                8, "ivf_cell"
-            ).sortBy("ivf_cell")
-        writer.saveAsTable(index_table)
         surv.write.mode("append").parquet(sink_path)
 
     return (
@@ -628,8 +565,7 @@ def _forget_in_store(spark, ids: DataFrame, path: str, id_col: str) -> int:
 
 
 def _forget_in_index(
-    spark, ids: DataFrame, index_table: str | None, key_col: str,
-    bucket_col: str, n_buckets: int,
+    spark, ids: DataFrame, index_table: str | None, key_col: str
 ) -> int:
     """Anti-join ``ids`` out of a bucketed index table through the
     bucketed-table replace protocol, keeping its bucket spec; returns
@@ -643,10 +579,7 @@ def _forget_in_index(
         return 0
     cur = spark.table(index_table)
     before = cur.count()
-    replace_bucketed_table(
-        spark, cur.join(ids, key_col, "left_anti"), index_table,
-        bucket_col, n_buckets, [bucket_col],
-    )
+    replace_bucketed_table(spark, cur.join(ids, key_col, "left_anti"), index_table)
     return before - spark.table(index_table).count()
 
 
@@ -656,7 +589,6 @@ def forget_documents(
     sink_path: str,
     index_table: str | None = None,
     id_col: str = "doc_id",
-    n_buckets: int = 16,
 ) -> dict[str, int]:
     """Right-to-be-forgotten across every surface the intake pipeline
     persists a document to: the corpus sink, the companion
@@ -686,9 +618,7 @@ def forget_documents(
         "dropped": _forget_in_store(
             spark, ids, sink_path.rstrip("/") + "_dropped", id_col
         ),
-        "index": _forget_in_index(
-            spark, ids, index_table, id_col, "bucket_key", n_buckets
-        ),
+        "index": _forget_in_index(spark, ids, index_table, id_col),
     }
 
 
@@ -698,7 +628,6 @@ def forget_vectors(
     sink_path: str,
     index_table: str | None = None,
     id_col: str = "vec_id",
-    n_buckets: int = 8,
 ) -> dict[str, int]:
     """Right-to-be-forgotten for the EMBEDDING intake — the vector twin
     of :func:`forget_documents`: removes ids from the corpus sink and
@@ -710,16 +639,16 @@ def forget_vectors(
 
     Same two commit protocols as :func:`forget_documents`: the sink
     through ``commit_store``, the index through
-    ``replace_bucketed_table``, preserving ``bucketBy(n_buckets,
-    ivf_cell)`` so post-forget intake batches keep their shuffle-free
-    probe join. Returns per-surface removed-row counts.
+    ``replace_bucketed_table``, preserving the index's ``bucketBy(…,
+    ivf_cell)`` spec so post-forget intake batches keep their
+    shuffle-free probe join. Returns per-surface removed-row counts.
     """
     ids = _forget_ids(spark, forget_ids, id_col)
     return {
         "sink": _forget_in_store(spark, ids, sink_path, id_col),
         "index": _forget_in_index(
             spark, ids.select(F.col(id_col).alias("right_id")), index_table,
-            "right_id", "ivf_cell", n_buckets,
+            "right_id",
         ),
     }
 
@@ -756,14 +685,8 @@ def corpus_stream_warc_intake(
         recs = warc_gz_parse(batch_df).filter(
             F.col("content_length") >= min_content_length
         )
-        # existence probe, not a bare except: a transient sink-read
-        # failure must fail the batch (foreachBatch retries it), not
-        # silently skip the anti-join and degrade the replay-idempotence
-        # guarantee from exactly-once to at-least-once
-        from ..session import path_exists
-
-        if path_exists(spark, sink_path):
-            seen = spark.read.parquet(sink_path).select("record_id").distinct()
+        seen = _read_landed(spark, [sink_path], ["record_id"])
+        if seen is not None:
             recs = recs.join(seen, "record_id", "left_anti")
         recs.write.mode("append").parquet(sink_path)
 

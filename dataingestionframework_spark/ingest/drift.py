@@ -14,9 +14,8 @@ physical reordering (column order stays logical, SURVEY §7.4).
 
 from __future__ import annotations
 
+import os
 from dataclasses import replace
-
-from pyspark.sql import DataFrame
 
 from ..sources.batch import RESCUED
 from ..specs import ColumnSpec, IngestionSpec
@@ -27,11 +26,13 @@ AUDIT_COLS = {"BatchId", "InsertDate", "ModifiedDateTime"}
 def sniff_source_columns(spark, spec: IngestionSpec, path: str | None = None) -> list[str]:
     """Discover the actual column set of the source directory.
 
-    A declared-schema CSV/JSON read can never *see* extra columns, so
-    drift detection needs a schema-only sniff first: CSV reads just the
-    header lines (no inferSchema → no data scan); JSON/parquet read
-    footers/sample. At 100 TB the sniff should target only new files —
-    the streaming path gets that for free from the file-source listing.
+    A declared-schema read can never *see* extra columns, so drift
+    detection needs a schema-only sniff first: CSV reads just the
+    header lines (no inferSchema → no data scan); JSON reads a sample;
+    a single parquet/ORC file has its footer read on the driver (no
+    Spark job), a directory goes through a mergeSchema read. At 100 TB
+    the sniff should target only new files — the streaming path gets
+    that for free from the file-source listing.
     """
     src = path or spec.source_path
     fmt = spec.file_format.lower()
@@ -41,7 +42,6 @@ def sniff_source_columns(spark, spec: IngestionSpec, path: str | None = None) ->
         # Local-FS implementation; on object stores the streaming file
         # listing supplies per-file paths and the same logic applies.
         import glob
-        import os
 
         paths = (
             sorted(glob.glob(os.path.join(src, "*"))) if os.path.isdir(src) else [src]
@@ -67,15 +67,31 @@ def sniff_source_columns(spark, spec: IngestionSpec, path: str | None = None) ->
         return cols
     if fmt == "json":
         return spark.read.json(src).columns
+    if os.path.isfile(src):
+        if fmt == "orc":
+            from pyarrow import orc
+
+            return orc.ORCFile(src).schema.names
+        import pyarrow.parquet as pq
+
+        return pq.read_schema(src).names
     if fmt == "orc":
         return spark.read.option("mergeSchema", "true").orc(src).columns
     return spark.read.option("mergeSchema", "true").parquet(src).columns
 
 
-def detect_new_columns(df: DataFrame, spec: IngestionSpec) -> list[str]:
-    known = {c.source_name for c in spec.columns} | AUDIT_COLS | {RESCUED}
-    known |= {"source_file_path", "source_file_mtime"}
-    return [c for c in df.columns if c not in known]
+def detect_new_columns(spark, spec: IngestionSpec, paths: list[str]) -> list[str]:
+    """Source columns the spec lacks, sniffed file by file (or directory
+    by directory) with :func:`sniff_source_columns`, in first-seen
+    order. Every format goes through the sniff: a declared-schema read
+    drops unknown columns, so the batch DataFrame never shows them."""
+    known = {c.source_name for c in spec.columns} | {RESCUED}
+    new: list[str] = []
+    for p in paths:
+        for c in sniff_source_columns(spark, spec, path=p):
+            if c not in known and c not in new:
+                new.append(c)
+    return new
 
 
 def reconcile_spec_with_table(spec: IngestionSpec, table) -> dict[str, list[str]]:

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog.system import OpsLog, SystemTables
 from ..catalog.table import ManagedTable, TableCatalog
-from ..sources.batch import RESCUED, read_batch, with_file_metadata
+from ..sources.batch import read_batch, with_file_metadata
 from ..sources.stream import read_stream
 from ..specs import IngestionSpec
 from .audit import project_rename_audit
@@ -184,11 +184,7 @@ class IngestionPipeline:
         self.log.write(spec.header_id, "START", f"batch ingest {spec.source_name}", 1, batch_id)
         # drift: sniff actual source columns (declared-schema reads can't
         # see new columns), evolve the spec, then read with the wider schema
-        from .drift import sniff_source_columns
-
-        known = {c.source_name for c in spec.columns}
-        new_cols = [c for c in sniff_source_columns(self.spark, spec)
-                    if c not in known and c != RESCUED]
+        new_cols = detect_new_columns(self.spark, spec, [spec.source_path])
         if new_cols:
             spec = evolve_spec(spec, new_cols)
             self.log.write(spec.header_id, "SCHEMA_DRIFT",
@@ -277,34 +273,25 @@ class IngestionPipeline:
     def _check_stream_drift(self, batch_df: DataFrame, spec: IngestionSpec) -> None:
         """Sniff the batch's source files for columns the spec lacks.
 
-        CSV/JSON streams read with a declared schema can never *show*
-        new columns in the batch DataFrame, so the check goes back to
-        the files (driver-side header sniff of just this batch's files).
-        On drift: record the new columns in column_config, then abort
-        the epoch BEFORE its commit (T7 semantics — restart reprocesses).
+        Streams read with a declared schema can never *show* new columns
+        in the batch DataFrame, whatever the format, so the check goes
+        back to the files (driver-side header/footer sniff of just this
+        batch's files). On drift: record the new columns in
+        column_config, then abort the epoch BEFORE its commit (T7
+        semantics — restart reprocesses).
         """
         from ..errors import StreamRestartRequired
-        from .drift import sniff_source_columns
+        from .quarantine import _local_path
 
-        if spec.file_format.lower() not in ("csv", "json"):
-            new = detect_new_columns(batch_df, spec)
-        else:
-            if "source_file_path" not in batch_df.columns:
-                return
-            from .quarantine import _local_path
-
-            files = [
-                _local_path(r.p)
-                for r in batch_df.select(
-                    F.col("source_file_path").alias("p")
-                ).distinct().collect()
-            ]
-            known = {c.source_name for c in spec.columns} | {RESCUED}
-            new = []
-            for p in files:
-                for c in sniff_source_columns(self.spark, spec, path=p):
-                    if c not in known and c not in new:
-                        new.append(c)
+        if "source_file_path" not in batch_df.columns:
+            return
+        files = [
+            _local_path(r.p)
+            for r in batch_df.select(
+                F.col("source_file_path").alias("p")
+            ).distinct().collect()
+        ]
+        new = detect_new_columns(self.spark, spec, files)
         if new:
             self.log.write(spec.header_id, "SCHEMA_DRIFT",
                            f"new columns: {','.join(new)}", 1)

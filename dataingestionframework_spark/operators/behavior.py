@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import is_finite
+from ..session import release_checkpoint
 
 
 def funnel_conversions(
@@ -42,7 +43,7 @@ def funnel_conversions(
     window over the raw table. The per-step anchor frames are
     checkpointed (they feed the next step), then ALL step counts are
     collected in ONE union-aggregate job — not L driver actions — and
-    the checkpoint blocks are unpersisted before returning.
+    the checkpoint blocks are released before returning.
 
     Output: (step_idx, step_name, n_users), step_idx 1-based.
     """
@@ -80,7 +81,7 @@ def funnel_conversions(
         }
     finally:
         for frame in checkpointed:
-            frame.unpersist()
+            release_checkpoint(frame)
     counts = [(i + 1, s, got.get(i + 1, 0)) for i, s in enumerate(steps)]
     return spark.createDataFrame(
         counts, "step_idx int, step_name string, n_users long"

@@ -42,13 +42,13 @@ def drop_table_and_location(spark: SparkSession, table_name: str) -> None:
 def write_bucketed(
     df: DataFrame,
     table_name: str,
-    bucket_col: str,
+    bucket_col: str | list[str],
     n_buckets: int = 16,
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a catalog table bucketed (and optionally
-    sorted) by the join key."""
+    sorted) by the join key (one column name or a list of them)."""
     w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
     if sort_cols:
         w = w.sortBy(*sort_cols)
@@ -57,6 +57,24 @@ def write_bucketed(
 
 def _rename_table(spark: SparkSession, src: str, dst: str) -> None:
     spark.sql(f"ALTER TABLE {src} RENAME TO {dst}")
+
+
+def bucket_spec(
+    spark: SparkSession, table_name: str
+) -> tuple[list[str], int, list[str]]:
+    """(bucket columns, bucket count, sort columns) of a live bucketed
+    catalog table, from ``DESCRIBE TABLE EXTENDED`` — which prints them
+    as ``'8'`` and ``'[`k`]'``."""
+    info = {
+        r.col_name: r.data_type
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table_name}").collect()
+    }
+
+    def names(key: str) -> list[str]:
+        inner = info.get(key, "[]").strip("[]")
+        return [c.strip().strip("`") for c in inner.split(",") if c.strip()]
+
+    return names("Bucket Columns"), int(info["Num Buckets"]), names("Sort Columns")
 
 
 def recover_bucketed_table(spark: SparkSession, table_name: str) -> str:
@@ -91,14 +109,13 @@ def recover_bucketed_table(spark: SparkSession, table_name: str) -> str:
 
 
 def replace_bucketed_table(
-    spark: SparkSession, df: DataFrame, table_name: str, bucket_col: str,
-    n_buckets: int = 16, sort_cols: list[str] | None = None,
+    spark: SparkSession, df: DataFrame, table_name: str
 ) -> None:
     """Replace the existing bucketed catalog table ``table_name`` with
-    ``df``'s rows under the same bucket spec, so a crash at any step
-    leaves one complete copy under SOME name and
-    :func:`recover_bucketed_table` restores either the old or the new
-    image, never a mix or nothing.
+    ``df``'s rows under the same bucket spec (read from the live table
+    by :func:`bucket_spec`), so a crash at any step leaves one complete
+    copy under SOME name and :func:`recover_bucketed_table` restores
+    either the old or the new image, never a mix or nothing.
 
     ``df`` is written in full to ``<name>__staged`` first (it may
     still read the live table), then the names rotate: live →
@@ -106,9 +123,10 @@ def replace_bucketed_table(
     point, and the old copy is dropped last.
     """
     staged, old = table_name + _STAGED_SUFFIX, table_name + _OLD_SUFFIX
+    bucket_cols, n_buckets, sort_cols = bucket_spec(spark, table_name)
     drop_table_and_location(spark, staged)
     drop_table_and_location(spark, old)
-    write_bucketed(df, staged, bucket_col, n_buckets, sort_cols)
+    write_bucketed(df, staged, bucket_cols, n_buckets, sort_cols)
     _rename_table(spark, table_name, old)
     _rename_table(spark, staged, table_name)
     drop_table_and_location(spark, old)
@@ -116,8 +134,7 @@ def replace_bucketed_table(
 
 
 def compact_bucketed_table(
-    spark: SparkSession, table_name: str, n_buckets: int, bucket_col: str,
-    sort_cols: list[str] | None = None,
+    spark: SparkSession, table_name: str
 ) -> tuple[int, int]:
     """Compact a bucketed catalog table that has accreted small files —
     every append (e.g. each incremental-LSH batch, each IVF index
@@ -167,10 +184,7 @@ def compact_bucketed_table(
     prev = spark.conf.get(conf_key)
     spark.conf.set(conf_key, "false")
     try:
-        replace_bucketed_table(
-            spark, spark.table(table_name), table_name, bucket_col,
-            n_buckets, sort_cols,
-        )
+        replace_bucketed_table(spark, spark.table(table_name), table_name)
     finally:
         spark.conf.set(conf_key, prev)
     return before, _count_files(table_name)

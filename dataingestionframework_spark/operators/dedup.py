@@ -188,69 +188,8 @@ def minhash_band_rows(
     ).select(id_col, "band.band_id", "band.band_hash")
 
 
-def update_lsh_index(
-    new_docs: DataFrame,
-    index,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-) -> DataFrame:
-    """Incremental near-dup indexing — the streaming/batch-incremental
-    shape of MinHash dedup at 100 TB: each new batch's band rows join
-    the PERSISTED index (cost = new×bucket-matches, never all×all),
-    then the batch is appended to the index table for future batches.
-
-    ``index`` is a ManagedTable holding (id, band_id, band_hash) —
-    created on first call. Returns distinct candidate pairs
-    (id_a, id_b), id_a < id_b: cross pairs (new vs already-indexed)
-    plus within-batch pairs. Feed them to :func:`verify_pairs_jaccard`
-    with a frame containing both sides' texts for exact confirmation.
-
-    At scale, bucket the index table by band_hash so each incremental
-    join co-locates without a full shuffle of the accumulated index.
-    """
-    from pyspark.sql import types as T
-
-    sig = minhash_signatures(new_docs, text_col, id_col, n, num_hashes)
-    bnew = minhash_band_rows(sig, id_col, num_hashes, bands).cache()
-
-    if not index.exists():
-        index.create(
-            T.StructType(
-                [
-                    T.StructField(id_col, T.LongType(), True),
-                    T.StructField("band_id", T.IntegerType(), True),
-                    T.StructField("band_hash", T.LongType(), True),
-                ]
-            )
-        )
-    old = index.read()
-    cross = (
-        bnew.select(F.col(id_col).alias("id_a"), "band_id", "band_hash")
-        .join(
-            old.select(F.col(id_col).alias("id_b"), "band_id", "band_hash"),
-            ["band_id", "band_hash"],
-        )
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-    )
-    a = bnew.select(F.col(id_col).alias("id_a"), "band_id", "band_hash")
-    b = bnew.select(F.col(id_col).alias("id_b"), "band_id", "band_hash")
-    within = (
-        a.join(b, ["band_id", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    pairs = cross.union(within).filter(F.col("id_a") != F.col("id_b")).distinct()
-    pairs = pairs.cache()
-    pairs.count()  # materialize BEFORE the index grows (self-pair safety)
-    index.append(bnew)
-    bnew.unpersist()
-    return pairs
+# bucket count of the persisted LSH band index
+LSH_INDEX_BUCKETS = 16
 
 
 def update_lsh_index_bucketed(
@@ -262,23 +201,24 @@ def update_lsh_index_bucketed(
     n: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
-    n_buckets: int = 16,
     consume=None,
 ) -> DataFrame:
-    """:func:`update_lsh_index` with the persisted index as a BUCKETED
-    catalog table — the 100 TB layout the plain variant's docstring
-    promises.
+    """Incremental near-dup indexing — the streaming/batch-incremental
+    shape of MinHash dedup at 100 TB, with the persisted index as a
+    BUCKETED catalog table: each new batch's band rows join the index
+    (cost = new×bucket-matches, never all×all), then the batch is
+    appended to the index for future batches.
 
     The band rows are keyed by a single ``bucket_key`` =
     xxhash64(band_id, band_hash) (one column, so the equi-join key IS
-    the bucket column) and the table is written ``bucketBy(n_buckets,
-    bucket_key)``. Each incremental batch then joins the accumulated
-    index with NO Exchange on the index side: the scan's bucket layout
-    already satisfies the join's hash distribution, so only the (small)
-    new batch shuffles — into exactly ``n_buckets`` partitions. At
-    scale the index is the big side and grows forever; never
-    reshuffling it turns recurring dedup from O(index) shuffle per
-    batch into O(batch).
+    the bucket column) and the table is written
+    ``bucketBy(LSH_INDEX_BUCKETS, bucket_key)``. Each incremental batch
+    then joins the accumulated index with NO Exchange on the index
+    side: the scan's bucket layout already satisfies the join's hash
+    distribution, so only the (small) new batch shuffles — into exactly
+    ``LSH_INDEX_BUCKETS`` partitions. At scale the index is the big
+    side and grows forever; never reshuffling it turns recurring dedup
+    from O(index) shuffle per batch into O(batch).
 
     Folding (band_id, band_hash) into one 64-bit key can collide two
     distinct buckets; a collision only ever ADDS a candidate pair, and
@@ -346,12 +286,13 @@ def update_lsh_index_bucketed(
             # aggregate's ~core-count partitions appended ~500 tiny files
             # PER BATCH (measured) — the accumulated index then pays
             # listing/open cost on every later batch's scan (guide §6).
-            # Hash-repartitioning on bucket_key into n_buckets partitions
-            # uses the same Murmur3 pmod as the bucket assignment, so each
-            # task holds exactly one bucket: n_buckets files per append.
-            bnew.repartition(n_buckets, "bucket_key")
+            # Hash-repartitioning on bucket_key into LSH_INDEX_BUCKETS
+            # partitions uses the same Murmur3 pmod as the bucket
+            # assignment, so each task holds exactly one bucket: one file
+            # per bucket per append.
+            bnew.repartition(LSH_INDEX_BUCKETS, "bucket_key")
             .write.mode("append")
-            .bucketBy(n_buckets, "bucket_key")
+            .bucketBy(LSH_INDEX_BUCKETS, "bucket_key")
             .sortBy("bucket_key")
             .saveAsTable(table_name)
         )

@@ -458,25 +458,9 @@ ORACLES: dict[str, str] = {
         GROUP BY o_orderpriority
     """,
     # same contract as minhash_near_dup: the incremental two-batch
-    # index must reproduce the exact all-pairs answer
-    "lsh_index_incremental": f"""
-        WITH toks AS (SELECT doc_id, {_TOKENS} AS ts
-                      FROM documents WHERE doc_id < 300),
-        grams AS (SELECT doc_id, list_distinct(list(gram)) AS g
-                  FROM ({_GRAMS3}) GROUP BY doc_id)
-        SELECT id_a, id_b, round(raw_sim, 4) AS jaccard_sim
-        FROM (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-                       / CAST(len(list_distinct(a.g || b.g)) AS DOUBLE)
-                       AS raw_sim
-            FROM grams a JOIN grams b ON a.doc_id < b.doc_id
-        )
-        WHERE raw_sim >= 0.3
-    """,
-    # the bucketed-index variant must reproduce the SAME exact
-    # all-pairs answer (bucket_key folding can only ADD candidates,
-    # and every candidate is exact-verified before output)
+    # bucketed index must reproduce the exact all-pairs answer
+    # (bucket_key folding can only ADD candidates, and every candidate
+    # is exact-verified before output)
     "lsh_index_bucketed": f"""
         WITH toks AS (SELECT doc_id, {_TOKENS} AS ts
                       FROM documents WHERE doc_id < 300),

@@ -2485,43 +2485,17 @@ def incremental_agg_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lsh_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental MinHash-LSH indexing in the graded gate: the corpus
-    arrives in two batches, each joined against the persisted band
-    index then appended to it; exact-verified pairs from the two
-    increments must equal the one-shot all-pairs answer (the same
-    oracle as minhash_near_dup) — proof the incremental funnel loses
-    nothing."""
-    from ..catalog.table import ManagedTable
-    from ..operators.dedup import update_lsh_index, verify_pairs_jaccard_arrays
-
-    t = _t(spark, sf_dir)
-    # bounded sample: the incremental-vs-exact contract is
-    # scale-independent, so a fixed 300-doc slice proves it at
-    # constant cost at any SF (full-corpus recall is already covered
-    # by minhash_near_dup)
-    docs = t("documents").filter(F.col("doc_id") < 300)
-    mid = 150
-    root = tempfile.mkdtemp(prefix="dif_lshidx_")
-    index = ManagedTable(spark, os.path.join(root, "bands"))
-    p1 = update_lsh_index(docs.filter(F.col("doc_id") < mid), index)
-    p2 = update_lsh_index(docs.filter(F.col("doc_id") >= mid), index)
-    # the increments' candidate pairs are sample-bounded — the lazy
-    # array-shape verify's territory (see verify_pairs_jaccard_arrays)
-    return verify_pairs_jaccard_arrays(
-        p1.union(p2).distinct(), docs, threshold=0.3
-    )
-
-
 def lsh_index_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bucketed-catalog-table variant of incremental LSH indexing
-    (operators/dedup.py::update_lsh_index_bucketed): the persisted band
-    index is bucketBy(16, bucket_key), so each batch's cross join
-    shuffles ONLY the new batch — no Exchange ever lands on the
-    accumulated index side (plan asserted in
-    test_bucketed_lsh_index_no_exchange_on_index_side). Same
-    incremental-equals-one-shot contract and the same exact all-pairs
-    Jaccard oracle as lsh_index_incremental."""
+    """Incremental MinHash-LSH indexing in the graded gate
+    (operators/dedup.py::update_lsh_index_bucketed): the corpus arrives
+    in two batches, each joined against the persisted band index, then
+    appended to it. The index is bucketBy(16, bucket_key), so each
+    batch's cross join shuffles ONLY the new batch — no Exchange ever
+    lands on the accumulated index side (plan asserted in
+    test_bucketed_lsh_index_no_exchange_on_index_side). Exact-verified
+    pairs from the two increments must equal the one-shot all-pairs
+    answer (the same oracle as minhash_near_dup) — proof the
+    incremental funnel loses nothing."""
     from ..operators.dedup import (
         update_lsh_index_bucketed,
         verify_pairs_jaccard_arrays,
@@ -6736,7 +6710,6 @@ QUERIES = {
     "time_travel_counts": time_travel_counts,
     "cdc_changes_orders": cdc_changes_orders,
     "incremental_agg_parity": incremental_agg_parity,
-    "lsh_index_incremental": lsh_index_incremental,
     "lsh_index_bucketed": lsh_index_bucketed,
     "lateral_topn_per_region": lateral_topn_per_region,
     "null_safe_join_counts": null_safe_join_counts,

@@ -189,7 +189,7 @@ def test_replace_bucketed_table_crash_matrix(spark, monkeypatch):
 
     def replace():
         kept = spark.table(name).filter("doc_id % 3 <> 0")
-        B.replace_bucketed_table(spark, kept, name, "bucket_key", 4, ["bucket_key"])
+        B.replace_bucketed_table(spark, kept, name)
 
     def state():
         assert B.recover_bucketed_table(spark, name) != "absent"

@@ -254,14 +254,16 @@ def test_llm_pipeline_composition_end_to_end(spark, tmp_path_factory):
     deterministic splits. Each hand-off is schema- and id-consistent."""
     import os
 
-    from dataingestionframework_spark.catalog.table import ManagedTable
     from dataingestionframework_spark.ingest.corpus import corpus_incremental_intake
+    from dataingestionframework_spark.operators.bucketing import (
+        drop_table_and_location,
+    )
     from dataingestionframework_spark.operators.corpus import (
         pack_sequences,
         select_within_token_budget,
         train_split_shard,
     )
-    from dataingestionframework_spark.operators.dedup import update_lsh_index
+    from dataingestionframework_spark.operators.dedup import update_lsh_index_bucketed
     from dataingestionframework_spark.operators.graph import dedup_clusters
     from dataingestionframework_spark.sources.synthetic import (
         SyntheticCorpusDataSource,
@@ -293,10 +295,15 @@ def test_llm_pipeline_composition_end_to_end(spark, tmp_path_factory):
     assert corpus.count() == 120  # exact dup never re-entered
 
     # 2. incremental near-dup index over the two intake halves
-    index = ManagedTable(spark, os.path.join(root, "lsh_idx"))
+    index = "dif_test_llm_e2e_lsh_idx"
+    drop_table_and_location(spark, index)
     half1 = corpus.filter(F.col("doc_id") < 70)
     half2 = corpus.filter(F.col("doc_id") >= 70)
-    pairs = update_lsh_index(half1, index).union(update_lsh_index(half2, index))
+    pairs = update_lsh_index_bucketed(half1, spark, index).union(
+        update_lsh_index_bucketed(half2, spark, index)
+    )
+    # both candidate frames are pinned: nothing below reads the index
+    drop_table_and_location(spark, index)
 
     # 3. transitive clustering → canonical keep-set
     clusters = dedup_clusters(corpus, pairs)

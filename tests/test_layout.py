@@ -59,6 +59,39 @@ def test_bucketed_join_elides_shuffle(spark, warehouse):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
+def test_forget_keeps_the_live_bucket_spec(spark, tmp_path):
+    """replace_bucketed_table rewrites under the spec the live table
+    has: a forget on a 4-bucket index, given no bucket count, leaves it
+    4-bucketed and sorted by its bucket column."""
+    from dataingestionframework_spark.ingest.corpus import forget_documents
+    from dataingestionframework_spark.operators.bucketing import (
+        bucket_spec,
+        drop_table_and_location,
+        write_bucketed,
+    )
+
+    sink = str(tmp_path / "sink")
+    idx = "dif_test_forget_spec_idx"
+    rows = spark.range(20).selectExpr(
+        "id AS doc_id", "CAST(id % 4 AS STRING) AS bucket_key"
+    )
+    rows.write.parquet(sink)
+    drop_table_and_location(spark, idx)
+    try:
+        write_bucketed(rows, idx, "bucket_key", 4, ["bucket_key"])
+        removed = forget_documents(spark, [7], sink, index_table=idx)
+        assert removed["index"] == 1
+        n_buckets = (
+            spark.sql(f"DESCRIBE TABLE EXTENDED {idx}")
+            .filter("col_name = 'Num Buckets'")
+            .first()[1]
+        )
+        assert n_buckets == "4"
+        assert bucket_spec(spark, idx) == (["bucket_key"], 4, ["bucket_key"])
+    finally:
+        drop_table_and_location(spark, idx)
+
+
 def test_aqe_skew_join_splits_hot_partition(spark):
     """AQE skew-join handling, proven at test scale by lowering the
     skew thresholds: one pathological key (100k rows vs ~10 per other

@@ -431,46 +431,6 @@ def test_synthetic_corpus_stream_source(spark, tmp_root):
     assert ids2 == list(range(ids2[-1] + 1))  # still contiguous
 
 
-def test_update_lsh_index_incremental_candidates(spark, docs, tmp_root):
-    """Incremental MinHash-LSH index: batch 2's near-dup of a batch-1
-    doc is found by joining the persisted band index (new x indexed),
-    never recomputing batch 1; the index accumulates across calls."""
-    from dataingestionframework_spark.catalog.table import ManagedTable
-    from dataingestionframework_spark.operators.dedup import (
-        update_lsh_index,
-        verify_pairs_jaccard,
-    )
-    import os
-
-    index = ManagedTable(spark, os.path.join(tmp_root, "lsh_index"))
-    batch1 = docs.filter(F.col("doc_id") < 60)
-    p1 = update_lsh_index(batch1, index)
-    n_idx_1 = index.count()
-    assert n_idx_1 == batch1.count() * 16  # one row per (doc, band)
-
-    # batch 2: a near-dup of doc 0 (one token changed) + fresh docs
-    base = docs.filter(F.col("doc_id") == 0).first().text
-    toks = base.split()
-    toks[len(toks) // 2] = "zzzchanged"
-    near = spark.createDataFrame(
-        [(7000, " ".join(toks), "en", "dup", len(base))], docs.schema
-    )
-    batch2 = docs.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 80)).union(near)
-    p2 = update_lsh_index(batch2, index)
-    assert index.count() == n_idx_1 + batch2.count() * 16
-
-    cand = {(r.id_a, r.id_b) for r in p2.collect()}
-    assert (0, 7000) in cand  # cross-batch near-dup caught via the index
-    # and the exact verifier confirms it above threshold
-    verified = verify_pairs_jaccard(
-        p2.filter((F.col("id_a") == 0) & (F.col("id_b") == 7000)),
-        docs.union(near), threshold=0.3,
-    )
-    assert verified.count() == 1
-    # batch-1-internal pairs must NOT reappear in batch 2's output
-    assert not any(a < 60 and b < 60 for a, b in cand)
-
-
 def test_asof_join_directions(spark):
     """backward / forward / nearest asof variants (pandas merge_asof
     semantics: nearest ties break backward)."""
@@ -661,6 +621,21 @@ def test_bucketed_lsh_index_pins_band_rows_and_caches_nothing(spark, docs):
         drop_table_and_location(spark, name)
 
 
+def test_funnel_conversions_releases_step_pins(spark):
+    """funnel_conversions frees its per-step anchor checkpoints before
+    returning: no persistent RDD outlives the call."""
+    from dataingestionframework_spark.operators.behavior import funnel_conversions
+
+    events = spark.createDataFrame(
+        [(1, 1, "view"), (1, 2, "cart"), (2, 1, "view")],
+        "user_id long, ts long, event_type string",
+    )
+    before = _persistent_ids(spark)
+    rows = funnel_conversions(events, ["view", "cart", "buy"]).collect()
+    assert [r.n_users for r in rows] == [2, 1, 0]
+    assert _persistent_ids(spark) <= before
+
+
 def test_bucketed_lsh_index_bucket_keys_are_stable(spark):
     """Bucket keys are the persisted index's format: an index written
     by an earlier build must keep matching new batches, so the keys of
@@ -818,10 +793,7 @@ def test_compact_bucketed_lsh_index_preserves_layout_and_results(spark, docs):
             )
         pre = {(r.doc_id, r.bucket_key) for r in spark.table(name).collect()}
 
-        before, after = compact_bucketed_table(
-            spark, name, n_buckets=16, bucket_col="bucket_key",
-            sort_cols=["bucket_key"],
-        )
+        before, after = compact_bucketed_table(spark, name)
         assert before > 16 and after <= 16, (before, after)
         assert {(r.doc_id, r.bucket_key)
                 for r in spark.table(name).collect()} == pre

@@ -169,6 +169,55 @@ def test_stream_drift_restarts_with_evolved_schema(spark, catalog, src_dir, tmp_
     assert logs.filter(F.col("LogEntryType") == "RESTART").count() == 1
 
 
+def test_parquet_stream_drift_restarts_with_evolved_schema(spark, catalog, tmp_root):
+    """A parquet stream is read with the declared schema, which hides
+    new columns from the batch frame, so drift is found by reading the
+    batch files' footers: one SCHEMA_DRIFT, one RESTART, and the new
+    column filled for the new row and NULL for the old ones."""
+    from datetime import date
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = os.path.join(tmp_root, "srcpq")
+    os.makedirs(d)
+    cols = {
+        "Id": pa.array([1, 2], pa.int32()),
+        "Item": pa.array(["widget", "gadget"]),
+        "Dt": pa.array([date(2024, 1, 1), date(2024, 1, 2)]),
+        "Value": pa.array([Decimal("10.50"), Decimal("20.25")], pa.decimal128(10, 2)),
+    }
+    pq.write_table(pa.table(cols), os.path.join(d, "f1.parquet"))
+
+    pipe = IngestionPipeline(catalog)
+    spec = _spec(tmp_root, d, header_id=15, table_name="main.pqdrift",
+                 source_name="pqdrift", file_format="parquet",
+                 pii_table_name="", corrupt_location="",
+                 checkpoint_location=os.path.join(tmp_root, "pqdrift_ckpt"))
+    pipe.run_stream(spec, bounded=True, timeout_s=120)
+    assert catalog.table("main.pqdrift").count() == 2
+
+    drift = {
+        "Id": pa.array([4], pa.int32()),
+        "Item": pa.array(["thing"]),
+        "Dt": pa.array([date(2024, 1, 4)]),
+        "Value": pa.array([Decimal("5.00")], pa.decimal128(10, 2)),
+        "Color": pa.array(["red"]),
+    }
+    pq.write_table(pa.table(drift), os.path.join(d, "f2_drift.parquet"))
+    pipe.run_stream(spec, bounded=True, timeout_s=120)
+
+    out = catalog.table("main.pqdrift").read()
+    assert "Color" in out.columns
+    assert out.count() == 3
+    vals = {r.Id: r.Color for r in out.collect()}
+    assert vals[4] == "red" and vals[1] is None and vals[2] is None
+    logs = pipe.tables.logs.read().filter(F.col("HeaderID") == 15)
+    assert logs.filter(F.col("LogEntryType") == "SCHEMA_DRIFT").count() == 1
+    assert logs.filter(F.col("LogEntryType") == "RESTART").count() == 1
+
+
 def test_daily_report_pass(spark, catalog, src_dir, tmp_root):
     pipe = IngestionPipeline(catalog)
     spec = _spec(tmp_root, src_dir, header_id=12, table_name="main.rpt",

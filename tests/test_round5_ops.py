@@ -495,7 +495,7 @@ def test_forget_index_swap_window_recovers(spark, tmp_path):
     drop_table_and_location(spark, idx)
     assert not spark.catalog.tableExists(idx)
 
-    removed = forget_documents(spark, [7], sink, index_table=idx, n_buckets=4)
+    removed = forget_documents(spark, [7], sink, index_table=idx)
     # recovery promoted the 15-row staged image, then forgot id 7
     assert spark.catalog.tableExists(idx)
     assert removed["index"] == 1

@@ -279,11 +279,14 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_root):
     assert got == expected
 
 
-def test_corpus_stream_clean_quality_and_dedup(spark, tmp_root):
-    """Streaming corpus intake: the quality gate drops junk docs and
-    dropDuplicatesWithinWatermark keeps one copy of each planted dup;
-    result equals the batch form of the same builder."""
-    from dataingestionframework_spark.ingest.corpus import corpus_stream_clean
+def test_corpus_stream_prep_quality_and_dedup(spark, tmp_root):
+    """Streaming corpus intake without chunking: the quality gate drops
+    junk docs and dropDuplicatesWithinWatermark keeps one copy of each
+    planted dup; result equals the batch form of the same builder."""
+    from dataingestionframework_spark.ingest.corpus import (
+        CorpusPrepSpec,
+        corpus_stream_prep,
+    )
 
     rows = [
         (1, "2024-01-01 10:00:00", "the quick brown fox jumps over the lazy dog again and again"),
@@ -297,7 +300,8 @@ def test_corpus_stream_clean_quality_and_dedup(spark, tmp_root):
     )
     df.coalesce(1).write.parquet(src)
 
-    batch = corpus_stream_clean(spark.read.parquet(src), min_quality=0.6)
+    spec = CorpusPrepSpec(min_quality=0.6, chunk_size=0)
+    batch = corpus_stream_prep(spark.read.parquet(src), spec)
     batch_texts = {r.text for r in batch.collect()}
     assert len(batch_texts) == 2  # dup collapsed, degenerate dropped
 
@@ -307,7 +311,7 @@ def test_corpus_stream_clean_quality_and_dedup(spark, tmp_root):
     try:
         stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
         q = (
-            corpus_stream_clean(stream, min_quality=0.6, observe_prefix="corpus")
+            corpus_stream_prep(stream, spec, observe_prefix="corpus")
             .writeStream.outputMode("append")
             .format("memory")
             .queryName("corpus_clean_out")
@@ -322,11 +326,11 @@ def test_corpus_stream_clean_quality_and_dedup(spark, tmp_root):
         # Per-stage funnel metrics rode the micro-batch progress:
         # 4 in → 3 past the quality gate → 2 emitted after dedup.
         deadline = time.time() + 30
-        while time.time() < deadline and not rec.observed("corpus_out"):
+        while time.time() < deadline and not rec.observed("corpus_deduped"):
             time.sleep(0.5)  # listener events are async
         assert sum(m["n"] for m in rec.observed("corpus_input")) == 4
         assert sum(m["n"] for m in rec.observed("corpus_gated")) == 3
-        assert sum(m["n"] for m in rec.observed("corpus_out")) == 2
+        assert sum(m["n"] for m in rec.observed("corpus_deduped")) == 2
         assert 0 < rec.observed("corpus_input")[0]["mean_quality"] <= 1.0
     finally:
         spark.streams.removeListener(rec)

@@ -50,6 +50,10 @@ DATASET_CONTINGENT = {
     # brute-force scans, prefix filters) must stay green on ANY data —
     # the round-7 fuzz run proved all of those DO (21/22 passed on the
     # hostile corpus; only kmeans drifted), so they are NOT waived.
+    # (``lsh_index_incremental`` is retired — ``lsh_index_bucketed`` gates
+    # the same contract — but its name stays: the waiver list is part of
+    # the committed fuzz artifact's corpus fingerprint, and a name with
+    # no query waives nothing.)
     "minhash_near_dup", "lsh_index_incremental", "lsh_index_bucketed",
     "stream_near_dup_intake_parity", "stream_near_dup_chain_parity",
     "fuzzy_decontaminate_docs",
@@ -431,7 +435,7 @@ SKEW_FAMILY_BUDGET_SEC: dict[str, tuple[float, tuple[str, ...]]] = {
     "lsh": (300.0, (
         "minhash_near_dup", "simhash_near_dup", "embedding_near_dup",
         "image_ahash_near_dup", "video_frame_near_dup",
-        "lsh_index_bucketed", "lsh_index_incremental",
+        "lsh_index_bucketed",
         "stream_near_dup_intake_parity", "stream_near_dup_chain_parity",
     )),
     "set_similarity": (60.0, ("set_similarity_join_docs",)),
