@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 
 from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs we also re-assert on sessions we did not create
@@ -90,17 +91,17 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
     AQE settings are runtime-mutable, so every public query entry calls
     this first to guarantee oracle-comparable semantics.
     """
-    for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on this build — keep going
     if shuffle_partitions is None:
         shuffle_partitions = default_parallelism()
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    except Exception:
-        pass
+    confs = {**RUNTIME_CONFS, "spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    for k, v in confs.items():
+        try:
+            spark.conf.set(k, v)
+        except AnalysisException as e:
+            # a conf that is static on this build keeps its startup value;
+            # any other failure is a real one
+            if e.getCondition() != "CANNOT_MODIFY_STATIC_CONFIG":
+                raise
     return spark
 
 
