@@ -4,7 +4,7 @@ The reference's pattern is config-driven ingestion (spec → pipeline →
 report). This applies the same pattern to LLM corpus prep: one spec
 declares quality gating, language filtering, dedup strategy, and
 chunking; ``CorpusPrep.run`` composes the operators into ONE lazy plan
-per output and reports per-stage row counts from a single cached pass.
+per output and reports per-stage row counts from a single checkpointed pass.
 
 Scale shape: every stage is a narrow projection or a hash-agg/semi-join
 the dedup operators already implement; nothing collects. At 100 TB the
@@ -14,10 +14,13 @@ near-dup stage dominates — it reuses the bucketed LSH funnels
 
 from __future__ import annotations
 
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import pinned
 
 
 @dataclass
@@ -257,7 +260,6 @@ def corpus_incremental_near_dup_intake(
         update_lsh_index_bucketed,
         verify_pairs_jaccard_arrays,
     )
-    from ..session import release_checkpoint
 
     dropped_path = sink_path.rstrip("/") + "_dropped"
 
@@ -269,55 +271,50 @@ def corpus_incremental_near_dup_intake(
         )
         if blockers is not None:
             b = b.join(blockers.select(id_col), id_col, "left_anti")
-        # pin the batch image: b's lineage reads the sink/dropped stores
-        # through the anti-join and this handler appends to both below;
-        # the pin also stops the dropDuplicates shuffle re-running in
-        # every downstream action (measured: skipping the pin on
-        # blocker-less batches was a net LOSS — the recomputation costs
-        # more than the pin job)
-        b = b.localCheckpoint()
-        texts = b.select(id_col, text_col)
-        if blockers is not None:
-            texts = texts.unionByName(blockers)
+        # every pin is released when the handler returns: the
+        # sink/dropped appends are the durable record (the band-row pin
+        # is released inside update_lsh_index_bucketed)
+        with ExitStack() as pins:
+            # pin the batch image: b's lineage reads the sink/dropped
+            # stores through the anti-join and this handler appends to
+            # both below; the pin also stops the dropDuplicates shuffle
+            # re-running in every downstream action (measured: skipping
+            # the pin on blocker-less batches was a net LOSS — the
+            # recomputation costs more than the pin job)
+            b = pins.enter_context(pinned(b))
+            texts = b.select(id_col, text_col)
+            if blockers is not None:
+                texts = texts.unionByName(blockers)
 
-        # per-batch candidate sets are O(batch), so the lazy array-shape
-        # verify wins (see verify_pairs_jaccard_arrays); it fuses with
-        # the drop-id projection into ONE action (sims are only ever
-        # compared to the threshold here, never emitted) — and that
-        # action doubles as the candidate materialization the index
-        # update needs before its append (``consume``): one job per
-        # batch instead of count-then-verify
-        def _verify_drop(pairs: DataFrame) -> DataFrame:
-            verified = verify_pairs_jaccard_arrays(
-                pairs, texts, text_col, id_col, threshold=threshold
-            )
-            # localCheckpoint = full-scan action over the candidate
-            # frame, satisfying consume's materialization contract;
-            # the pin also feeds the two writes below
-            return (
-                verified.select(F.col("id_b").alias(id_col))
-                .distinct()
-                .localCheckpoint()
-            )
+            # per-batch candidate sets are O(batch), so the lazy array-shape
+            # verify wins (see verify_pairs_jaccard_arrays); it fuses with
+            # the drop-id projection into ONE action (sims are only ever
+            # compared to the threshold here, never emitted) — and that
+            # action doubles as the candidate materialization the index
+            # update needs before its append (``consume``): one job per
+            # batch instead of count-then-verify
+            def _verify_drop(pairs: DataFrame) -> DataFrame:
+                verified = verify_pairs_jaccard_arrays(
+                    pairs, texts, text_col, id_col, threshold=threshold
+                )
+                # the pin is a full-scan action over the candidate
+                # frame, satisfying consume's materialization contract;
+                # it also feeds the two writes below
+                return pins.enter_context(
+                    pinned(verified.select(F.col("id_b").alias(id_col)).distinct())
+                )
 
-        drop = update_lsh_index_bucketed(
-            b, spark, index_table, text_col=text_col, id_col=id_col,
-            num_hashes=num_hashes, bands=bands, consume=_verify_drop,
-        )
-        (
-            b.join(drop, id_col, "left_semi")
-            .select(id_col, text_col)
-            .write.mode("append")
-            .parquet(dropped_path)
-        )
-        b.join(drop, id_col, "left_anti").write.mode("append").parquet(sink_path)
-        # superseded per-batch state: the sink/dropped appends are the
-        # durable record, so the batch pins are never read again —
-        # release them now instead of holding every batch's blocks
-        # until the periodic GC (guide §5; the band-row pin is released
-        # inside update_lsh_index_bucketed, which caches no candidates)
-        release_checkpoint(drop)
-        release_checkpoint(b)
+            drop = update_lsh_index_bucketed(
+                b, spark, index_table, text_col=text_col, id_col=id_col,
+                num_hashes=num_hashes, bands=bands, consume=_verify_drop,
+            )
+            (
+                b.join(drop, id_col, "left_semi")
+                .select(id_col, text_col)
+                .write.mode("append")
+                .parquet(dropped_path)
+            )
+            b.join(drop, id_col, "left_anti").write.mode("append").parquet(sink_path)
 
     return (
         stream.writeStream.foreachBatch(handle)
@@ -367,7 +364,8 @@ class CorpusPrep:
         # (at 100 TB the old shape re-read the corpus once per report
         # line). The dedup stages branch the lineage (LSH self-joins),
         # where observed counters would double-fire, so the gated frame
-        # is persisted once and the remaining counts scan the cache.
+        # is checkpointed once — that job fires every observation — and
+        # the remaining counts scan the checkpoint.
         taps: list[tuple[str, Observation]] = []
 
         def tap(name: str, frame: DataFrame) -> DataFrame:
@@ -387,8 +385,7 @@ class CorpusPrep:
                 .drop("_q"),
             )
 
-        cur = cur.persist()
-        cur.count()  # single pass: fires every observation + fills the cache
+        cur = cur.localCheckpoint()
         stages: list[tuple[str, int]] = [(name, int(o.get["n"])) for name, o in taps]
 
         if s.dedup == "exact":
@@ -397,7 +394,7 @@ class CorpusPrep:
         elif s.dedup in ("minhash", "simhash"):
             # exact dedup first (cheap, shrinks the LSH input), then
             # near-dup on the survivors
-            cur = drop_exact_duplicates(cur, s.text_col, s.id_col).persist()
+            cur = drop_exact_duplicates(cur, s.text_col, s.id_col).localCheckpoint()
             stages.append(("dedup_exact", cur.count()))
             drops = self._near_dup_drop_ids(cur)
             cur = cur.join(drops, s.id_col, "left_anti")
@@ -487,48 +484,48 @@ def embedding_incremental_ann_intake(
         seen = _read_landed(spark, [sink_path], [id_col])
         if seen is not None:
             b = b.join(seen, id_col, "left_anti")
-        b = b.localCheckpoint()
-        assigned, _ = ivf_assign(b, vec_col=vec_col, centroids=centroids)
-        batch_index = assigned.select(
-            F.col(id_col).alias("right_id"),
-            F.col(vec_col).alias("rvec"),
-            "ivf_cell",
-        )
-        blockers = batch_index
-        if spark.catalog.tableExists(index_table):
-            blockers = spark.table(index_table).unionByName(batch_index)
-        if probe_cells is not None:
-            cells = F.array(*[F.lit(c) for c in probe_cells])
-        else:
-            from ..operators.similarity import _probe_cells_expr
+        with pinned(b) as b:
+            assigned, _ = ivf_assign(b, vec_col=vec_col, centroids=centroids)
+            batch_index = assigned.select(
+                F.col(id_col).alias("right_id"),
+                F.col(vec_col).alias("rvec"),
+                "ivf_cell",
+            )
+            blockers = batch_index
+            if spark.catalog.tableExists(index_table):
+                blockers = spark.table(index_table).unionByName(batch_index)
+            if probe_cells is not None:
+                cells = F.array(*[F.lit(c) for c in probe_cells])
+            else:
+                from ..operators.similarity import _probe_cells_expr
 
-            cells = _probe_cells_expr(vec_col, centroids, nprobe)
-        probe = b.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_pv"),
-            vec_norm(F.col(vec_col)).alias("_pn"),
-            F.explode(cells).alias("ivf_cell"),
-        )
-        rv = F.transform(F.col("rvec"), lambda x: x.cast("double"))
-        denom = F.col("_pn") * vec_norm(F.col("rvec"))
-        cos = F.when(denom > 0, vec_dot(F.col("_pv"), rv) / denom)
-        drops = (
-            probe.join(blockers, "ivf_cell")
-            .filter(F.col("right_id") < F.col(id_col))
-            .filter(F.round(cos, 6) >= F.lit(threshold))
-            .select(id_col)
-            .distinct()
-        )
-        surv = b.join(drops, id_col, "left_anti")
-        # the WHOLE batch joins the index (dropped ids included); only
-        # survivors reach the sink. Append mode creates a missing table.
-        (
-            batch_index.write.mode("append")
-            .bucketBy(8, "ivf_cell")
-            .sortBy("ivf_cell")
-            .saveAsTable(index_table)
-        )
-        surv.write.mode("append").parquet(sink_path)
+                cells = _probe_cells_expr(vec_col, centroids, nprobe)
+            probe = b.select(
+                F.col(id_col),
+                F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_pv"),
+                vec_norm(F.col(vec_col)).alias("_pn"),
+                F.explode(cells).alias("ivf_cell"),
+            )
+            rv = F.transform(F.col("rvec"), lambda x: x.cast("double"))
+            denom = F.col("_pn") * vec_norm(F.col("rvec"))
+            cos = F.when(denom > 0, vec_dot(F.col("_pv"), rv) / denom)
+            drops = (
+                probe.join(blockers, "ivf_cell")
+                .filter(F.col("right_id") < F.col(id_col))
+                .filter(F.round(cos, 6) >= F.lit(threshold))
+                .select(id_col)
+                .distinct()
+            )
+            surv = b.join(drops, id_col, "left_anti")
+            # the WHOLE batch joins the index (dropped ids included); only
+            # survivors reach the sink. Append mode creates a missing table.
+            (
+                batch_index.write.mode("append")
+                .bucketBy(8, "ivf_cell")
+                .sortBy("ivf_cell")
+                .saveAsTable(index_table)
+            )
+            surv.write.mode("append").parquet(sink_path)
 
     return (
         stream.writeStream.foreachBatch(handle)

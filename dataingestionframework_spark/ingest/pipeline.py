@@ -11,6 +11,7 @@ instead of the reference's poll-the-control-table-then-stop loop
 from __future__ import annotations
 
 import os
+from contextlib import ExitStack
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog.system import OpsLog, SystemTables
 from ..catalog.table import ManagedTable, TableCatalog
+from ..session import pinned
 from ..sources.batch import read_batch, with_file_metadata
 from ..sources.stream import read_stream
 from ..specs import IngestionSpec
@@ -99,20 +101,16 @@ class IngestionPipeline:
         target: ManagedTable,
         batch_id: int,
     ) -> IngestResult:
-        # Persist only when the corrupt gate forces a second pass over the
-        # batch; otherwise the single write pass needs no materialization.
-        needs_second_pass = bool(spec.corrupt_location)
-        if needs_second_pass:
-            batch_df = batch_df.persist()
-        persisted_out = None
-        try:
+        with ExitStack() as pins:
             # schema drift is settled before a batch gets here: run_batch
             # evolves the spec from its source sniff, and the stream
             # handler aborts the epoch in _check_stream_drift
 
-            # corrupt gate → quarantine + structured failure
+            # corrupt gate → quarantine + structured failure; the gate
+            # is a second pass over the batch, so the batch is pinned
             n_corrupt = 0
             if spec.corrupt_location:
+                batch_df = pins.enter_context(pinned(batch_df))
                 try:
                     n_corrupt = quarantine_batch(
                         batch_df, spec.corrupt_location, spec.error_location
@@ -132,16 +130,14 @@ class IngestionPipeline:
                 from .expectations import split_valid
 
                 out, viol = split_valid(out, row_rules)
-                out = persisted_out = out.persist()  # consumed by ≥1 write below
-                n_viol = 0
+                out = pins.enter_context(pinned(out))  # consumed by ≥1 write below
                 if spec.error_location:
-                    viol = viol.persist()
-                    n_viol = viol.count()
-                    if n_viol:
-                        viol.write.mode("append").parquet(
-                            os.path.join(spec.error_location, "_expectations")
-                        )
-                    viol.unpersist()
+                    with pinned(viol) as viol:
+                        n_viol = viol.count()
+                        if n_viol:
+                            viol.write.mode("append").parquet(
+                                os.path.join(spec.error_location, "_expectations")
+                            )
                 else:
                     n_viol = viol.count()
                 if n_viol:
@@ -170,11 +166,6 @@ class IngestionPipeline:
                 rows = target.append_counted(out)
             self.log.write(spec.header_id, "ROW_COUNT", str(rows), 1, batch_id)
             return IngestResult(spec.header_id, batch_id, rows, n_corrupt, spec.table_name)
-        finally:
-            if needs_second_pass:
-                batch_df.unpersist()
-            if persisted_out is not None:
-                persisted_out.unpersist()
 
     # -- batch entry point --------------------------------------------------
 
@@ -189,9 +180,10 @@ class IngestionPipeline:
             spec = evolve_spec(spec, new_cols)
             self.log.write(spec.header_id, "SCHEMA_DRIFT",
                            f"new columns: {','.join(new_cols)}", 1, batch_id)
-        df = read_batch(self.spark, spec)
-        if spec.file_format in ("csv", "json"):
-            df = with_file_metadata(df)
+        # lineage columns for every format, as in run_stream: the corrupt
+        # gate reads source_file_path from its pinned batch, where
+        # _metadata no longer resolves
+        df = with_file_metadata(read_batch(self.spark, spec))
         try:
             result = self.process_batch(df, spec, target, batch_id)
         except Exception:

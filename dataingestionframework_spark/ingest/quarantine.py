@@ -13,7 +13,7 @@ counts in ONE aggregation and move every file.
 Implementation note: Spark refuses queries whose referenced columns
 from a raw CSV/JSON scan are only the corrupt-record column
 (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and ``_metadata`` can't resolve
-through a cached plan — so the gate aggregates on the materialized
+through a pinned plan — so the gate aggregates on the materialized
 ``source_file_path`` lineage column instead.
 """
 
@@ -42,9 +42,10 @@ def _local_path(p: str) -> str:
 def corrupt_summary(df: DataFrame, file_col: str = "source_file_path") -> tuple[int, list[str]]:
     """(corrupt-row count, distinct offending files) in one aggregation.
 
-    NOTE: the caller must persist/cache ``df`` first — Spark disallows
-    queries referencing only the corrupt-record column on a raw CSV/JSON
-    scan, and the cached relation lifts that restriction."""
+    NOTE: the caller must pass a pinned ``df`` (``session.pinned``) —
+    Spark disallows queries referencing only the corrupt-record column
+    on a raw CSV/JSON scan, and the pinned relation lifts that
+    restriction."""
     if RESCUED not in df.columns:
         return 0, []
     key = F.col(file_col) if file_col in df.columns else F.col("_metadata.file_path")

@@ -16,11 +16,13 @@ over the full table, no Python.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import is_finite
-from ..session import release_checkpoint
+from ..session import pinned
 
 
 def funnel_conversions(
@@ -41,9 +43,9 @@ def funnel_conversions(
     previous step's anchor times — L small hash joins all keyed on the
     user, reusing one partitioning; no per-user event sorting, no
     window over the raw table. The per-step anchor frames are
-    checkpointed (they feed the next step), then ALL step counts are
+    pinned (they feed the next step), then ALL step counts are
     collected in ONE union-aggregate job — not L driver actions — and
-    the checkpoint blocks are released before returning.
+    the pins are released before returning.
 
     Output: (step_idx, step_name, n_users), step_idx 1-based.
     """
@@ -53,35 +55,30 @@ def funnel_conversions(
 
     spark = events.sparkSession
     anchors: DataFrame | None = None
-    checkpointed: list[DataFrame] = []
     step_users: list[DataFrame] = []
-    for i, step in enumerate(steps):
-        ev = events.filter(F.col(type_col) == step).select(
-            F.col(user_col).alias("_u"), F.col(ts_col).alias("_ts")
-        )
-        if anchors is None:
-            anchors = ev.groupBy("_u").agg(F.min("_ts").alias("_anchor"))
-        else:
-            anchors = (
-                ev.join(anchors, "_u")
-                .filter(F.col("_ts") > F.col("_anchor"))
-                .groupBy("_u")
-                .agg(F.min("_ts").alias("_anchor"))
+    with ExitStack() as pins:
+        for i, step in enumerate(steps):
+            ev = events.filter(F.col(type_col) == step).select(
+                F.col(user_col).alias("_u"), F.col(ts_col).alias("_ts")
             )
-        anchors = anchors.localCheckpoint()  # L tiny user-level frames
-        checkpointed.append(anchors)
-        step_users.append(anchors.select(F.lit(i + 1).alias("step_idx")))
-    union = reduce(DataFrame.unionByName, step_users)
-    try:
+            if anchors is None:
+                anchors = ev.groupBy("_u").agg(F.min("_ts").alias("_anchor"))
+            else:
+                anchors = (
+                    ev.join(anchors, "_u")
+                    .filter(F.col("_ts") > F.col("_anchor"))
+                    .groupBy("_u")
+                    .agg(F.min("_ts").alias("_anchor"))
+                )
+            anchors = pins.enter_context(pinned(anchors))  # L tiny user-level frames
+            step_users.append(anchors.select(F.lit(i + 1).alias("step_idx")))
+        union = reduce(DataFrame.unionByName, step_users)
         got = {
             int(r["step_idx"]): int(r["n"])
             for r in union.groupBy("step_idx")
             .agg(F.count("*").alias("n"))
             .collect()
         }
-    finally:
-        for frame in checkpointed:
-            release_checkpoint(frame)
     counts = [(i + 1, s, got.get(i + 1, 0)) for i, s in enumerate(steps)]
     return spark.createDataFrame(
         counts, "step_idx int, step_name string, n_users long"

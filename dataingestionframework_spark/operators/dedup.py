@@ -9,11 +9,13 @@ only runs on LSH candidates. No driver-side loops, no collect().
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import jaccard, word_ngrams
-from ..session import release_checkpoint
+from ..session import pinned
 from .text import fingerprint
 
 # ---------------------------------------------------------------------------
@@ -238,47 +240,46 @@ def update_lsh_index_bucketed(
     before re-reading the index, or it sees the pre-append file list.
     """
     sig = minhash_signatures(new_docs, text_col, id_col, n, num_hashes)
-    # eager pin, not a lazy cache: a cache puts its own nested AQE plan
-    # and query stage under every reference in the consumer's plan
-    bnew = (
+    band_rows = (
         minhash_band_rows(sig, id_col, num_hashes, bands)
         .withColumn("bucket_key", F.xxhash64("band_id", "band_hash"))
         .select(id_col, "bucket_key")
-        .localCheckpoint()
     )
-    cross = None
-    if spark.catalog.tableExists(table_name):
-        old = spark.table(table_name)
-        cross = (
-            bnew.select(F.col(id_col).alias("id_a"), "bucket_key")
-            .join(
-                old.select(F.col(id_col).alias("id_b"), "bucket_key"),
-                "bucket_key",
+    # the band rows are read by the candidate joins and the index
+    # append; the append is their last read
+    with pinned(band_rows) as bnew:
+        cross = None
+        if spark.catalog.tableExists(table_name):
+            old = spark.table(table_name)
+            cross = (
+                bnew.select(F.col(id_col).alias("id_a"), "bucket_key")
+                .join(
+                    old.select(F.col(id_col).alias("id_b"), "bucket_key"),
+                    "bucket_key",
+                )
+                .select(
+                    F.least("id_a", "id_b").alias("id_a"),
+                    F.greatest("id_a", "id_b").alias("id_b"),
+                )
             )
-            .select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-            )
+        a = bnew.select(F.col(id_col).alias("id_a"), "bucket_key")
+        b = bnew.select(F.col(id_col).alias("id_b"), "bucket_key")
+        within = (
+            a.join(b, "bucket_key")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
         )
-    a = bnew.select(F.col(id_col).alias("id_a"), "bucket_key")
-    b = bnew.select(F.col(id_col).alias("id_b"), "bucket_key")
-    within = (
-        a.join(b, "bucket_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    pairs = within if cross is None else cross.union(within)
-    pairs = pairs.filter(F.col("id_a") != F.col("id_b")).distinct()
-    # the candidate frame must be FULLY materialized before the append
-    # grows the index (self-pair safety: a later scan of the lazy plan
-    # would see the batch's own band rows). ``consume`` lets the caller
-    # fuse its downstream action with that materialization under the
-    # contract that it runs an action over the ENTIRE lazy frame (a
-    # full-scan localCheckpoint / collect) and returns a result that no
-    # longer reads it: nothing may read the candidate plan after the
-    # append, nor the band-row pin after its release. Without
-    # ``consume`` the pairs get their own pin for the same reasons.
-    try:
+        pairs = within if cross is None else cross.union(within)
+        pairs = pairs.filter(F.col("id_a") != F.col("id_b")).distinct()
+        # the candidate frame must be FULLY materialized before the append
+        # grows the index (self-pair safety: a later scan of the lazy plan
+        # would see the batch's own band rows). ``consume`` lets the caller
+        # fuse its downstream action with that materialization under the
+        # contract that it runs an action over the ENTIRE lazy frame (a
+        # full-scan localCheckpoint / collect) and returns a result that no
+        # longer reads it: nothing may read the candidate plan after the
+        # append, nor the band-row pin after the block. Without
+        # ``consume`` the pairs get their own pin for the same reasons.
         out = consume(pairs) if consume is not None else pairs.localCheckpoint()
         (
             # repartition by the bucket column first: a bucketed write emits
@@ -296,8 +297,6 @@ def update_lsh_index_bucketed(
             .sortBy("bucket_key")
             .saveAsTable(table_name)
         )
-    finally:
-        release_checkpoint(bnew)  # the append is the band rows' last read
     return out
 
 
@@ -330,7 +329,7 @@ def minhash_lsh_candidates(
     caller needs every individual pair.
     Returns distinct (id_a, id_b) with id_a < id_b.
 
-    Pass precomputed (persisted) ``signatures`` to share them with the
+    Pass precomputed (pinned) ``signatures`` to share them with the
     estimate stage instead of recomputing.
     """
     sig = signatures if signatures is not None else minhash_signatures(
@@ -463,11 +462,11 @@ def verify_pairs_jaccard(
     pair_count × array_size. Grams are built only for docs appearing in
     a candidate pair (semi-join first).
 
-    Pass ``grams`` — a PERSISTED distinct (id, gram) table the caller
+    Pass ``grams`` — a PINNED distinct (id, gram) table the caller
     already built (candidate generators derive one anyway) — to skip
     this function's own gram explode+distinct pass (~0.7 s/corpus-pass
-    at sf0.1); the caller owns its lifecycle and must unpersist only
-    after this function returns (the result is localCheckpoint-ed, so
+    at sf0.1); the caller owns the pin and may release it as soon as
+    this function returns (the result is localCheckpoint-ed, so
     return = materialized).
 
     Pairs with an empty intersection cannot reach any threshold > 0 and
@@ -486,13 +485,11 @@ def verify_pairs_jaccard(
         .distinct()
     )
     if grams is not None:
-        g = grams.select(id_col, "gram").join(ids, id_col, "left_semi")
-        own = False
+        g_scope = nullcontext(grams.select(id_col, "gram").join(ids, id_col, "left_semi"))
     else:
         needed = df.join(ids, id_col, "left_semi")
-        g = exploded_word_ngrams(needed, text_col, id_col, n).distinct().persist()
-        own = True
-    try:
+        g_scope = pinned(exploded_word_ngrams(needed, text_col, id_col, n).distinct())
+    with g_scope as g:
         sizes = g.groupBy(id_col).agg(F.count("*").alias("sz"))
         inter = (
             candidates.join(g.select(F.col(id_col).alias("id_a"), "gram"), "id_a")
@@ -521,9 +518,6 @@ def verify_pairs_jaccard(
             )
         )
         return out.localCheckpoint()
-    finally:
-        if own:
-            g.unpersist()
 
 
 def near_duplicates_minhash(
@@ -540,20 +534,19 @@ def near_duplicates_minhash(
 
     1. LSH banding → candidate pairs (linear in corpus)
     2. signature-estimate filter: est-Jaccard = matching sig fraction,
-       computed from the persisted signatures (cheap long compares) —
+       computed from the pinned signatures (cheap long compares) —
        drops the large false-positive tail banding lets through, with a
        margin below ``threshold`` so recall is preserved
     3. exact n-gram Jaccard verification on the survivors only
 
-    Signatures are computed ONCE and persisted; banding, the estimate,
-    and the id-projections all reuse them. (Sharing a persisted
+    Signatures are computed ONCE and pinned; banding, the estimate,
+    and the id-projections all reuse them. (Sharing a pinned
     distinct-gram table with the verify — the set_similarity_join_exact
     trick — was measured a LOSS here, 4.22 s → 4.95 s interleaved: the
     est-filtered candidate set is small, so verify's semi-join-pruned
     gram pass is cheaper than the corpus-wide distinct shuffle the
     sharing adds to the signature path.)"""
-    sigs = minhash_signatures(df, text_col, id_col, n, num_hashes).persist()
-    try:
+    with pinned(minhash_signatures(df, text_col, id_col, n, num_hashes)) as sigs:
         cands = minhash_lsh_candidates(
             df, text_col, id_col, n, num_hashes, bands, signatures=sigs,
             max_bucket_size=max_bucket_size,
@@ -573,14 +566,9 @@ def near_duplicates_minhash(
             .withColumn("est_jaccard", matches / F.lit(float(num_hashes)))
             .filter(F.col("est_jaccard") >= threshold - 0.15)
             .select("id_a", "id_b")
-            .persist()
         )
-        try:
-            return verify_pairs_jaccard(est, df, text_col, id_col, n, threshold)
-        finally:
-            est.unpersist()
-    finally:
-        sigs.unpersist()
+        with pinned(est) as pairs:
+            return verify_pairs_jaccard(pairs, df, text_col, id_col, n, threshold)
 
 
 def _prefix_pair_join(a_prefix: DataFrame, b_prefix: DataFrame, threshold: float) -> DataFrame:
@@ -669,8 +657,8 @@ def _prefix_join_candidates(
     from ..functions import exploded_word_ngrams
 
     # g feeds three subtrees (sizes, gram frequencies, the ranked
-    # prefix table); a caller-persisted ``grams`` table turns those
-    # into cache reads instead of three inline explode+distinct copies
+    # prefix table); a caller-pinned ``grams`` table turns those
+    # into pin reads instead of three inline explode+distinct copies
     if grams is None:
         g = exploded_word_ngrams(df, text_col, id_col, n).distinct()
     else:
@@ -686,18 +674,20 @@ def _prefix_join_candidates(
     )
     alpha_doc = F.ceil(F.lit(threshold) * F.col("sz") - F.lit(1e-9))
     prefix_len = F.col("sz") - alpha_doc + F.lit(1)
-    prefix0 = ranked.filter(F.col("pos") <= prefix_len).select(
-        "id", "sz", "pos", "gram"
-    )
+
+    def prefix(r: DataFrame) -> DataFrame:
+        return r.filter(F.col("pos") <= prefix_len).select("id", "sz", "pos", "gram")
+
     if max_prefix_df is None:
+        prefix0 = prefix(ranked)
         return _prefix_pair_join(prefix0, prefix0, threshold).distinct()
 
     # capped path: one pass builds the ranked table, a cheap probe asks
     # whether ANY gram is hot — on natural corpora none is (rarest-first
     # prefixes disperse), and the classic plan runs unchanged instead of
     # paying the re-rank window + 3-way join for nothing
-    ranked = ranked.persist()
-    try:
+    with pinned(ranked) as ranked:
+        prefix0 = prefix(ranked)
         # hot grams by PREFIX occupancy (not raw df): a gram is
         # pathological only when many docs carry it in their prefix
         hot = (
@@ -738,8 +728,6 @@ def _prefix_join_candidates(
         sa = _prefix_pair_join(sat_prefix, prefix0, threshold)
         as_ = _prefix_pair_join(prefix0, sat_prefix, threshold)
         return nn.union(sa).union(as_).distinct().localCheckpoint()
-    finally:
-        ranked.unpersist()
 
 
 def set_similarity_join_exact(
@@ -786,20 +774,17 @@ def set_similarity_join_exact(
     """
     from ..functions import exploded_word_ngrams
 
-    # ONE persisted distinct-gram table feeds candidate generation
+    # ONE pinned distinct-gram table feeds candidate generation
     # (three consumers there) AND the exact verify — each stage was
-    # re-deriving it (guide §2.4). Both stages return materialized
-    # frames (localCheckpoint), so unpersisting afterwards is safe.
-    g0 = exploded_word_ngrams(df, text_col, id_col, n).distinct().persist()
-    try:
+    # re-deriving it (guide §2.4). The verify returns a materialized
+    # frame (localCheckpoint), so releasing the pin afterwards is safe.
+    with pinned(exploded_word_ngrams(df, text_col, id_col, n).distinct()) as g0:
         cand = _prefix_join_candidates(
             df, text_col, id_col, n, threshold, max_prefix_df, grams=g0
         )
         return verify_pairs_jaccard(
             cand, df, text_col, id_col, n, threshold, grams=g0
         )
-    finally:
-        g0.unpersist()
 
 
 def containment_join(
@@ -844,8 +829,7 @@ def containment_join(
     if max_id is not None:
         base = base.filter(F.col(id_col) < max_id)
     g = exploded_word_ngrams(base, text_col, id_col, n).distinct()
-    g = g.withColumnRenamed(id_col, "id").persist()
-    try:
+    with pinned(g.withColumnRenamed(id_col, "id")) as g:
         sz = g.groupBy("id").agg(F.count("*").alias("sz"))
         dfreq = g.groupBy("gram").agg(F.count("*").alias("gdf"))
         w = Window.partitionBy("id").orderBy(F.col("gdf").asc(), F.col("gram").asc())
@@ -901,8 +885,6 @@ def containment_join(
             )
         )
         return out.localCheckpoint()
-    finally:
-        g.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -90,9 +90,7 @@ def connected_components(
         # the changed-count action was the old label table's last
         # consumer (jumped is already materialized) — release its
         # checkpoint blocks now instead of leaking one node-table image
-        # per round until the periodic GC (round-9 verdict item 1;
-        # DataFrame.unpersist is a no-op for checkpoints, hence the
-        # RDD-level release)
+        # per round until the periodic GC
         release_checkpoint(labels)
         labels = jumped
         if changed == 0:
@@ -259,9 +257,9 @@ def bfs_distances(
     materialized — localCheckpoint is eager, so once the new blocks
     exist the old ones feed nothing; leaving them to the periodic-GC
     ContextCleaner let 2×diameter block sets pile up for the whole
-    query and cost a real ~1.4× on the sf0.1 doc graph (round-9
-    verdict item 1). The per-round emptiness probe is one driver
-    boolean — O(diameter) round trips, the same budget any BFS pays.
+    query and cost a real ~1.4× on the sf0.1 doc graph. The per-round
+    emptiness probe is one driver boolean — O(diameter) round trips,
+    the same budget any BFS pays.
     Edges are treated as DIRECTED; symmetrize first for undirected
     semantics.
 

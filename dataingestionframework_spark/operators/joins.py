@@ -107,7 +107,7 @@ def bloom_anti_join(
     reach the exact anti-join. At 100 TB this shrinks the anti-join
     shuffle from |probe| to |matches|·(1+fp); the probe relation is
     referenced by both branches (two scans of the same pruned columns —
-    cheap next to the shuffle it removes; persist upstream if the probe
+    cheap next to the shuffle it removes; pin upstream if the probe
     is itself expensive to recompute).
 
     NULL probe keys never equal anything, so both branches keep them —

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity, vec_dot
+from ..session import pinned
 
 
 def _query_lit(query_vec: Sequence[float]):
@@ -675,17 +676,8 @@ def pq_fit(
             ).alias(f"s{j}")
             for j in range(m)
         ]
-    ).cache()
-    # fewer rows than codes: clamp k per subspace (ML KMeans needs
-    # k <= n); fit-path count job, never on serving
-    n = slices.count()
-    if n == 1:  # ML KMeans requires k >= 2; each codebook IS the slice
-        row = fit_df.select(vec_col).first()[0]
-        v = [float(x) for x in row]
-        books1 = [[v[j * sub:(j + 1) * sub]] for j in range(m)]
-        slices.unpersist()
-        return books1
-    # the m subspace fits are INDEPENDENT jobs over the same cached
+    )
+    # the m subspace fits are INDEPENDENT jobs over the same pinned
     # frame — submit them from driver threads so each fit's scheduling
     # gaps and stage tails back-fill with the next fit's tasks (guide
     # §2.6). Determinism unchanged: same per-subspace seed, and results
@@ -696,23 +688,26 @@ def pq_fit(
 
     from pyspark import inheritable_thread_target
 
-    def fit_one(j: int) -> list[list[float]]:
-        model = KMeans(
-            k=min(n_codes, n), seed=seed + j, featuresCol=f"s{j}"
-        ).fit(slices)
-        return [list(map(float, c)) for c in model.clusterCenters()]
+    with pinned(slices) as slices:
+        # fewer rows than codes: clamp k per subspace (ML KMeans needs
+        # k <= n); fit-path count job, never on serving
+        n = slices.count()
+        if n == 1:  # ML KMeans requires k >= 2; each codebook IS the slice
+            v = [float(x) for x in dim_row[0]]
+            return [[v[j * sub:(j + 1) * sub]] for j in range(m)]
 
-    try:
+        def fit_one(j: int) -> list[list[float]]:
+            model = KMeans(
+                k=min(n_codes, n), seed=seed + j, featuresCol=f"s{j}"
+            ).fit(slices)
+            return [list(map(float, c)) for c in model.clusterCenters()]
+
         # session-arg form: propagates job tags / local properties
         # (scheduler pool, cancellation groups) to the fit threads and
         # avoids the PySpark 4 'Tags will not be inherited' warning
         wrapped = inheritable_thread_target(fit_df.sparkSession)(fit_one)
         with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-            books = list(pool.map(wrapped, range(m)))
-    finally:
-        # a failed fit must not leave the sliced frame pinned in cache
-        slices.unpersist()
-    return books
+            return list(pool.map(wrapped, range(m)))
 
 
 def _sub_argmin(vec_col: str, book: list[list[float]], j: int, sub: int):

@@ -19,6 +19,7 @@ from ..functions import (
     token_count,
     tokens,
 )
+from ..session import pinned, release_checkpoint
 
 # Tiny per-language stopword profiles for the n-gram/stopword language
 # heuristic. Deliberately deterministic + dependency-free.
@@ -1219,8 +1220,6 @@ def bpe_train(
 
     import pandas as _pd
 
-    from ..session import release_checkpoint
-
     vocab = (
         df.select(F.explode(tokens(F.col(text_col))).alias("w"))
         .groupBy("w")
@@ -1287,8 +1286,7 @@ def bpe_train(
         ).localCheckpoint()
         # eager checkpoint: the previous round's vocab image feeds
         # nothing now — release it instead of leaking one checkpoint
-        # per merge round (same RDD-level release as the graph
-        # iteratives; DataFrame.unpersist is a no-op for checkpoints)
+        # per merge round
         release_checkpoint(prev)
     release_checkpoint(vocab)  # result is the driver-side merge list only
     return merges
@@ -1579,10 +1577,9 @@ def lang_id_ngram(
     # dv feeds THREE consumers (centroids, doc norms, the scoring join);
     # left lazy, the optimizer re-runs the full corpus explode+hash for
     # each — four Generate scans in the physical plan (guide §2.4:
-    # duplicated subtrees are shuffles/passes to remove). Persist the
-    # doc-cardinality agg once and every consumer reads the cached rows.
-    dv = bucket_counts(df, [id_col]).persist()
-    try:
+    # duplicated subtrees are shuffles/passes to remove). Pin the
+    # doc-cardinality agg once and every consumer reads the pinned rows.
+    with pinned(bucket_counts(df, [id_col])) as dv:
         if train is df:
             # centroids are the label-wise sum of the SAME doc vectors —
             # derive them from dv (a doc-cardinality agg) instead of a
@@ -1634,10 +1631,8 @@ def lang_id_ngram(
             )
         )
         # materialize the (doc-cardinality, 3-column) prediction table
-        # before dv is unpersisted; the returned plan builds on it
+        # before dv is released; the returned plan builds on it
         best = best.localCheckpoint()
-    finally:
-        dv.unpersist()
     out = df.join(best, id_col, "left")
     return out.withColumn(
         "lang_pred", F.coalesce("lang_pred", F.lit("und"))

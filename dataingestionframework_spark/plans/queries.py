@@ -3187,10 +3187,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     Returns (stream_df, cleanup_fn)."""
     import shutil
 
-    try:
-        prev_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
-    except Exception:
-        prev_nanos = None
+    prev_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
     src_dir = tempfile.mkdtemp(prefix="dif_stream_src_")
@@ -3419,12 +3416,7 @@ def stream_dedup_rocksdb_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.stateStore.providerClass",
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
     )
-    prev = {}
-    for ck in conf_keys:
-        try:
-            prev[ck] = spark.conf.get(ck)
-        except Exception:
-            prev[ck] = None
+    prev = {ck: spark.conf.get(ck, None) for ck in conf_keys}
     use_rocksdb_state(spark)
     stream, cleanup = _events_stream(spark, sf_dir)
     try:

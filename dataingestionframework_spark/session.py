@@ -14,6 +14,7 @@ driver contract — gets the same scale-aware defaults:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
 from pyspark.errors import AnalysisException
@@ -130,23 +131,46 @@ def use_rocksdb_state(spark: SparkSession, changelog: bool = True) -> SparkSessi
     return spark
 
 
+@contextmanager
+def pinned(df):
+    """Materialize ``df`` once (an eager ``localCheckpoint``), yield the
+    pinned frame, and free its blocks when the block exits — normally
+    or by an exception.
+
+    The one way to share an intermediate between several reads inside
+    one function or foreachBatch handler. Eager, not a lazy
+    ``persist``: a cached relation puts its own nested AQE plan and
+    query stage under every reference in the consumer's plan, and its
+    fill job lands wherever the first reader happens to run. Only
+    frames built from the yielded pin read it, and everything read
+    from it must be materialized (collected, written, or itself
+    checkpointed) before the block exits: lineage is truncated, so a
+    lazy plan that still reads the pin fails once it is released. A
+    pin that a returned lazy plan reads stays a plain
+    ``localCheckpoint()``.
+    """
+    pin = df.localCheckpoint()
+    try:
+        yield pin
+    finally:
+        release_checkpoint(pin)
+
+
 def release_checkpoint(df) -> bool:
     """Free the block-manager storage behind a ``localCheckpoint``-ed
     DataFrame NOW.
 
-    ``DataFrame.unpersist()`` only clears cache-manager entries
-    (``.persist()``/``.cache()``); a localCheckpoint lives as RDD
-    storage referenced by the plan's ``LogicalRDD`` node, reclaimed
-    only when the driver GCs the RDD handle and ContextCleaner notices
-    — under the 3-minute periodic GC that means superseded per-round
-    images in iterative operators (BFS frontier loop, label
-    propagation, pagerank, BPE training) pile up for the whole query
-    (round-9 verdict item 1: a real ~1.4× on bfs_distances).
-    Unpersisting the backing RDD directly drops the blocks
-    immediately. ONLY call on checkpoints nothing will read again:
-    lineage is truncated, so a later read would fail rather than
-    recompute. Returns False (and frees nothing) when the plan is not
-    a materialized LogicalRDD — safe on non-checkpointed frames — or on
+    A localCheckpoint lives as RDD storage referenced by the plan's
+    ``LogicalRDD`` node, reclaimed only when the driver GCs the RDD
+    handle and ContextCleaner notices — under the 3-minute periodic GC
+    that means superseded per-round images in iterative operators (BFS
+    frontier loop, label propagation, pagerank, BPE training) pile up
+    for the whole query. Unpersisting the backing RDD directly drops
+    the blocks immediately. ONLY call on checkpoints nothing will read
+    again: lineage is truncated, so a later read would fail rather than
+    recompute. Callers outside the rolling loops use :func:`pinned`.
+    Returns False (and frees nothing) when the plan is not a
+    materialized LogicalRDD — safe on non-checkpointed frames — or on
     a ``Py4JError`` (JVM internals moved; GC reclaims); others propagate.
     """
     try:

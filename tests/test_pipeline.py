@@ -218,6 +218,31 @@ def test_parquet_stream_drift_restarts_with_evolved_schema(spark, catalog, tmp_r
     assert logs.filter(F.col("LogEntryType") == "RESTART").count() == 1
 
 
+def test_parquet_batch_passes_the_corrupt_gate(spark, catalog, tmp_root):
+    """A parquet batch run with a corrupt location: the gate groups the
+    pinned batch by its source_file_path lineage column."""
+    from datetime import date
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = os.path.join(tmp_root, "srcpqbatch")
+    os.makedirs(d)
+    pq.write_table(pa.table({
+        "Id": pa.array([1, 2], pa.int32()),
+        "Item": pa.array(["widget", "gadget"]),
+        "Dt": pa.array([date(2024, 1, 1), date(2024, 1, 2)]),
+        "Value": pa.array([Decimal("10.50"), Decimal("20.25")], pa.decimal128(10, 2)),
+    }), os.path.join(d, "f1.parquet"))
+    pipe = IngestionPipeline(catalog)
+    spec = _spec(tmp_root, d, header_id=16, table_name="main.pqbatch",
+                 source_name="pqbatch", file_format="parquet", pii_table_name="")
+    res = pipe.run_batch(spec)
+    assert (res.rows_loaded, res.n_corrupt) == (2, 0)
+    assert catalog.table("main.pqbatch").count() == 2
+
+
 def test_daily_report_pass(spark, catalog, src_dir, tmp_root):
     pipe = IngestionPipeline(catalog)
     spec = _spec(tmp_root, src_dir, header_id=12, table_name="main.rpt",

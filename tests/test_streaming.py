@@ -910,3 +910,48 @@ def test_forget_vectors_removes_sink_and_ivf_blockers(spark, tmp_root):
         ) == [2, 10]
     finally:
         drop_table_and_location(spark, idx)
+
+
+def test_embedding_intake_releases_batch_pins(spark, tmp_root):
+    """Three files, one per trigger: the handler's batch pin is released
+    inside each micro-batch, so the stream leaves no persistent RDD."""
+    from dataingestionframework_spark.ingest.corpus import (
+        embedding_incremental_ann_intake,
+    )
+    from dataingestionframework_spark.operators.bucketing import (
+        drop_table_and_location,
+    )
+
+    def vec(seed, dim=8):
+        return [float((seed * 31 + i * 7) % 11 - 5) for i in range(dim)]
+
+    src = os.path.join(tmp_root, "pin_src")
+    now = time.time()
+    for i in range(3):
+        p = os.path.join(src, f"b{i}.parquet")
+        spark.createDataFrame(
+            [(i * 10 + j, vec(i * 10 + j)) for j in range(4)],
+            "vec_id long, embedding array<float>",
+        ).coalesce(1).write.parquet(p)
+        for f in os.listdir(p):
+            os.utime(os.path.join(p, f), (now - 600 + i * 60,) * 2)
+    idx = "dif_test_emb_pin_idx"
+    drop_table_and_location(spark, idx)
+    base = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    try:
+        stream = (
+            spark.readStream.schema("vec_id long, embedding array<float>")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(src, "*.parquet"))
+        )
+        q = embedding_incremental_ann_intake(
+            stream, os.path.join(tmp_root, "pin_sink"),
+            os.path.join(tmp_root, "pin_ck"), idx, [vec(1), vec(2)],
+            threshold=0.99,
+        )
+        q.awaitTermination(180)
+        assert len(q.recentProgress) >= 3
+        assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - base == set()
+        assert spark.table(idx).count() == 12
+    finally:
+        drop_table_and_location(spark, idx)
