@@ -19,6 +19,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import pinned
 
@@ -146,10 +147,12 @@ def corpus_stream_prep(
     return cur
 
 
-def _read_landed(spark, paths: list[str], cols: list[str]) -> DataFrame | None:
-    """Union of ``cols`` over the parquet stores in ``paths`` that
-    exist; None when none does — what an intake's replay guard
-    anti-joins a batch against. A left-anti join needs no distinct.
+def _read_landed(spark, paths: list[str], schema: StructType) -> DataFrame | None:
+    """Union of the ``schema`` columns over the parquet stores in
+    ``paths`` that exist; None when none does — what an intake's replay
+    guard anti-joins a batch against. A left-anti join needs no
+    distinct. ``schema`` types the guarded columns as the handler
+    writes them, so the read runs no footer-schema job.
 
     Existence probe, not try/except: a transient read failure while a
     store EXISTS must fail the batch (foreachBatch retries it), not
@@ -160,7 +163,7 @@ def _read_landed(spark, paths: list[str], cols: list[str]) -> DataFrame | None:
     landed = None
     for path in paths:
         if path_exists(spark, path):
-            part = spark.read.parquet(path).select(*cols)
+            part = spark.read.schema(schema).parquet(path)
             landed = part if landed is None else landed.unionByName(part)
     return landed
 
@@ -200,7 +203,7 @@ def corpus_incremental_intake(
                 F.col("_q") >= min_quality
             ).drop("_q")
         b = b.withColumn("_fp", fingerprint(F.col(text_col))).dropDuplicates(["_fp"])
-        seen = _read_landed(spark, [sink_path], ["_fp"])
+        seen = _read_landed(spark, [sink_path], StructType([b.schema["_fp"]]))
         if seen is not None:
             b = b.join(seen, "_fp", "left_anti")
         b.write.mode("append").parquet(sink_path)
@@ -267,7 +270,8 @@ def corpus_incremental_near_dup_intake(
         spark = batch.sparkSession
         b = batch.dropDuplicates([id_col])
         blockers = _read_landed(
-            spark, [sink_path, dropped_path], [id_col, text_col]
+            spark, [sink_path, dropped_path],
+            StructType([batch.schema[id_col], batch.schema[text_col]]),
         )
         if blockers is not None:
             b = b.join(blockers.select(id_col), id_col, "left_anti")
@@ -286,27 +290,24 @@ def corpus_incremental_near_dup_intake(
             if blockers is not None:
                 texts = texts.unionByName(blockers)
 
-            # per-batch candidate sets are O(batch), so the lazy array-shape
-            # verify wins (see verify_pairs_jaccard_arrays); it fuses with
-            # the drop-id projection into ONE action (sims are only ever
-            # compared to the threshold here, never emitted) — and that
-            # action doubles as the candidate materialization the index
-            # update needs before its append (``consume``): one job per
-            # batch instead of count-then-verify
-            def _verify_drop(pairs: DataFrame) -> DataFrame:
-                verified = verify_pairs_jaccard_arrays(
-                    pairs, texts, text_col, id_col, threshold=threshold
-                )
-                # the pin is a full-scan action over the candidate
-                # frame, satisfying consume's materialization contract;
-                # it also feeds the two writes below
-                return pins.enter_context(
-                    pinned(verified.select(F.col("id_b").alias(id_col)).distinct())
-                )
-
-            drop = update_lsh_index_bucketed(
+            # the candidates are pinned before the index append grows
+            # the index (update_lsh_index_bucketed's consume contract);
+            # the verify and the drop set read that small pin, not the
+            # candidate join and its index scan
+            cand = update_lsh_index_bucketed(
                 b, spark, index_table, text_col=text_col, id_col=id_col,
-                num_hashes=num_hashes, bands=bands, consume=_verify_drop,
+                num_hashes=num_hashes, bands=bands,
+                consume=lambda pairs: pins.enter_context(pinned(pairs)),
+            )
+            # per-batch candidate sets are O(batch), so the lazy
+            # array-shape verify wins (see verify_pairs_jaccard_arrays);
+            # sims are only compared to the threshold here, and the drop
+            # set is pinned because both writes below read it
+            verified = verify_pairs_jaccard_arrays(
+                cand, texts, text_col, id_col, threshold=threshold
+            )
+            drop = pins.enter_context(
+                pinned(verified.select(F.col("id_b").alias(id_col)).distinct())
             )
             (
                 b.join(drop, id_col, "left_semi")
@@ -481,7 +482,7 @@ def embedding_incremental_ann_intake(
     def handle(batch: DataFrame, _epoch: int) -> None:
         spark = batch.sparkSession
         b = batch.dropDuplicates([id_col])
-        seen = _read_landed(spark, [sink_path], [id_col])
+        seen = _read_landed(spark, [sink_path], StructType([batch.schema[id_col]]))
         if seen is not None:
             b = b.join(seen, id_col, "left_anti")
         with pinned(b) as b:
@@ -682,7 +683,9 @@ def corpus_stream_warc_intake(
         recs = warc_gz_parse(batch_df).filter(
             F.col("content_length") >= min_content_length
         )
-        seen = _read_landed(spark, [sink_path], ["record_id"])
+        seen = _read_landed(
+            spark, [sink_path], StructType([recs.schema["record_id"]])
+        )
         if seen is not None:
             recs = recs.join(seen, "record_id", "left_anti")
         recs.write.mode("append").parquet(sink_path)

@@ -145,15 +145,14 @@ def minhash_signatures(
     A row-local shape (per-doc ``transform``/``array_min``/``xxhash64``
     over the gram array, no shuffle) was also rejected: its lambdas run
     interpreted, 2.4× slower at 20k docs × 200 tokens (16.3 s vs 7.3 s).
+    Columns come from SQL text: as ``F.min(F.xxhash64(…))`` objects they
+    cost ~30 py4j round trips each (~4,500 with the band rows; ~600 now).
     """
     from ..functions import exploded_word_ngrams
 
     grams = exploded_word_ngrams(df, text_col, id_col, n).select(id_col, "gram")
     return grams.groupBy(id_col).agg(
-        *[
-            F.min(F.xxhash64("gram", F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
+        *[F.expr(f"min(xxhash64(gram, {i})) AS h{i}") for i in range(num_hashes)]
     )
 
 
@@ -164,30 +163,16 @@ def minhash_band_rows(
     bands: int = 16,
 ) -> DataFrame:
     """Signature columns → LSH band rows (id, band_id, band_hash): one
-    row per (doc, band), the storable/joinable form of the index."""
+    row per (doc, band), the storable/joinable form of the index. Built
+    from SQL text like :func:`minhash_signatures`."""
     rows_per_band = num_hashes // bands
-    return sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"h{j}")
-                                    for j in range(b * rows_per_band, (b + 1) * rows_per_band)
-                                ],
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_hash")
+    structs = ", ".join(
+        f"named_struct('band_id', {b}, 'band_hash', xxhash64(concat_ws(',', "
+        + ", ".join(f"h{j}" for j in range(b * rows_per_band, (b + 1) * rows_per_band))
+        + ")))"
+        for b in range(bands)
+    )
+    return sig.selectExpr(f"`{id_col}`", f"inline(array({structs}))")
 
 
 # bucket count of the persisted LSH band index
@@ -231,8 +216,9 @@ def update_lsh_index_bucketed(
     (new × indexed) plus within-batch — then appends the batch's band
     rows to the index table for future batches; the band rows are
     pinned once and released after the append. With ``consume`` (a
-    function from the lazy candidate frame to a MATERIALIZED result —
-    see the inline contract), returns ``consume``'s result instead.
+    function that pins the lazy candidate frame — see the inline
+    contract), returns ``consume``'s result instead: the caller owns
+    that pin and runs its downstream work over it.
 
     Session note: Spark's table-relation cache is per-session — a
     DIFFERENT session (e.g. the driver session while foreachBatch
@@ -273,13 +259,15 @@ def update_lsh_index_bucketed(
         pairs = pairs.filter(F.col("id_a") != F.col("id_b")).distinct()
         # the candidate frame must be FULLY materialized before the append
         # grows the index (self-pair safety: a later scan of the lazy plan
-        # would see the batch's own band rows). ``consume`` lets the caller
-        # fuse its downstream action with that materialization under the
-        # contract that it runs an action over the ENTIRE lazy frame (a
-        # full-scan localCheckpoint / collect) and returns a result that no
-        # longer reads it: nothing may read the candidate plan after the
-        # append, nor the band-row pin after the block. Without
-        # ``consume`` the pairs get their own pin for the same reasons.
+        # would see the batch's own band rows), and nothing may read the
+        # band-row pin after the block. ``consume`` must pin the ENTIRE
+        # lazy frame and return that pin (the near-dup intake enters it
+        # into its handler's ExitStack, so the pin is released with the
+        # batch); the caller's verify then reads the small pin. Fusing the
+        # verify into this action was measured slower: its pin planned a
+        # 363-node tree that re-inlined the candidate join, index scan
+        # included, five times. Without ``consume`` the pairs get their
+        # own returned pin.
         out = consume(pairs) if consume is not None else pairs.localCheckpoint()
         (
             # repartition by the bucket column first: a bucketed write emits

@@ -82,6 +82,11 @@ def get_spark(app_name: str = "dataingestionframework_spark",
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # release_checkpoint frees checkpoints on purpose; Spark WARNs on each
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD", jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark
 
 

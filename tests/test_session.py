@@ -95,3 +95,17 @@ def _calls(attr_names: set[str]) -> set[tuple[str, str, str]]:
 def test_one_pin_mechanism_in_the_package():
     assert _calls({"persist", "cache", "unpersist"}) == LAZY_PIN_EXCEPTIONS
     assert {(m, f) for m, f, _ in _calls({"release_checkpoint"})} == RELEASE_CALLERS
+
+
+def test_checkpoint_release_warning_is_silenced(spark):
+    """Each release_checkpoint would log one MapPartitionsRDD WARN;
+    get_spark raises only that logger to ERROR."""
+    jvm = spark.sparkContext._jvm
+    log = jvm.org.apache.logging.log4j.LogManager.getLogger(
+        "org.apache.spark.rdd.MapPartitionsRDD"
+    )
+    assert not log.isWarnEnabled()
+    assert log.isErrorEnabled()
+    assert jvm.org.apache.logging.log4j.LogManager.getLogger(
+        "org.apache.spark.rdd.RDD"
+    ).isWarnEnabled()
