@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import TableNotFoundError
+from ..functions import sql_ident
 
 _META = "_meta.json"
 _CURRENT = "_current"
@@ -546,6 +547,30 @@ class ManagedTable:
         fields = list(stored.fields) + [f for f in incoming.fields if f.name not in names]
         return T.StructType(fields)
 
+    @staticmethod
+    def _conform(df: DataFrame, incoming: T.StructType, schema: T.StructType) -> DataFrame:
+        """``df`` (whose schema is ``incoming``) projected onto ``schema``:
+        one ``selectExpr`` of SQL text — a field already of its stored
+        type passes as is, an atomic one is CAST, a missing one is NULL.
+        Nested types that differ go through ``Column.cast``, whose
+        ``DataType`` keeps the stored nested nullability that SQL type
+        text cannot express."""
+        have = {f.name: f.dataType for f in incoming.fields}
+        exprs, recast = [], {}
+        for f in schema.fields:
+            q, got = sql_ident(f.name), have.get(f.name)
+            if got == f.dataType:
+                exprs.append(q)
+            elif isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType,
+                                         T.UserDefinedType)):
+                exprs.append(q if got is not None else f"NULL AS {q}")
+                recast[f.name] = F.col(f.name).cast(f.dataType)
+            else:
+                value = q if got is not None else "NULL"
+                exprs.append(f"CAST({value} AS {f.dataType.simpleString()}) AS {q}")
+        out = df.selectExpr(*exprs)
+        return out.withColumns(recast) if recast else out
+
     def append(self, df: DataFrame, merge_schema: bool = True) -> None:
         """Parquet append into the current version dir — no rewrite.
 
@@ -563,13 +588,9 @@ class ManagedTable:
             self._writer(df, "append").parquet(self.data_dir())
             self._log_commit("append")
             return
-        schema = self._merged_schema(df.schema) if merge_schema else self.schema()
-        out = df.select(
-            *[
-                F.col(f.name).cast(f.dataType) if f.name in df.columns else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
+        incoming = df.schema
+        schema = self._merged_schema(incoming) if merge_schema else self.schema()
+        out = self._conform(df, incoming, schema)
         self._writer(out, "append").parquet(self.data_dir())
         if merge_schema:
             self._write_meta(schema)

@@ -43,6 +43,18 @@ def cosine_similarity(a: Column, b: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# SQL text
+# ---------------------------------------------------------------------------
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier. Projections built
+    from SQL text (``selectExpr``) parse on the JVM in one call; a
+    ``Column`` per field costs several py4j round trips each."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+# ---------------------------------------------------------------------------
 # Numeric predicates
 # ---------------------------------------------------------------------------
 

@@ -15,7 +15,9 @@ report row per rule.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -73,10 +75,11 @@ def evaluate(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
     )
 
 
-def row_violation(e: Expectation) -> Column:
-    """Boolean column: this row violates ``e``. Aggregate-level kinds
+def row_violation(e: Expectation, c: Column | None = None) -> Column:
+    """Boolean column: this row violates ``e``, evaluated on ``c``
+    (default: the rule's own column). Aggregate-level kinds
     (``unique``) have no row predicate — ValueError."""
-    c = F.col(e.column)
+    c = F.col(e.column) if c is None else c
     if e.kind == "not_null":
         return c.isNull()
     if e.kind == "between":
@@ -86,6 +89,30 @@ def row_violation(e: Expectation) -> Column:
     if e.kind == "matches":
         return ~F.coalesce(c.rlike(e.pattern), F.lit(True))
     raise ValueError(f"expectation kind {e.kind!r} has no row-level predicate")
+
+
+def row_rules(expectations: list[Expectation]) -> list[Expectation]:
+    """The rules with a row-level predicate (all but ``unique``)."""
+    return [e for e in expectations if e.kind != "unique"]
+
+
+def any_violation(rules: list[Expectation], col_of=lambda e: F.col(e.column)) -> Column:
+    """Boolean column: the row breaks at least one of the row-level
+    ``rules``, each evaluated on ``col_of(rule)``. The one predicate
+    :func:`split_valid` routes by and :func:`violation_count` counts."""
+    return reduce(operator.or_, [row_violation(e, col_of(e)) for e in rules])
+
+
+def violation_count(expectations: list[Expectation], exprs: dict[str, str]) -> Column:
+    """Aggregate: rows breaking any row-level rule, for observing on a
+    frame the rules' columns are not yet projected on. ``exprs`` maps
+    a rule's column to the SQL expression that will produce it (a
+    column it does not name is read as is), so the count agrees with
+    :func:`split_valid` on the projected frame."""
+    return F.count_if(any_violation(
+        row_rules(expectations),
+        lambda e: F.expr(exprs[e.column]) if e.column in exprs else F.col(e.column),
+    ))
 
 
 def split_valid(
@@ -99,15 +126,13 @@ def split_valid(
     NULL values only fail ``not_null`` (range/set/regex rules treat
     NULL as not-applicable, matching SQL three-valued logic).
     """
-    rules = [e for e in expectations if e.kind != "unique"]
+    rules = row_rules(expectations)
     if not rules:
         return df, df.limit(0).withColumn("_failed_rules", F.lit(""))
     flags = [(e.name, row_violation(e)) for e in rules]
     failed = F.concat_ws(
         ",", *[F.when(bad, F.lit(name)) for name, bad in flags]
     )
-    any_bad = flags[0][1]
-    for _, bad in flags[1:]:
-        any_bad = any_bad | bad
+    any_bad = any_violation(rules)
     viol = df.filter(any_bad).withColumn("_failed_rules", failed)
     return df.filter(~any_bad), viol

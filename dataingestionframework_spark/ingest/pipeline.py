@@ -2,31 +2,43 @@
 
 Stages (SURVEY §3/EP1): prepare (table create + idempotent re-run
 delete) → read (batch or stream) → drift detect → corrupt gate →
-project/rename/audit → PII fork → write → log + control updates →
-reconcile. Bounded streaming runs drain with ``Trigger.AvailableNow``
-instead of the reference's poll-the-control-table-then-stop loop
+project/rename/audit → expectations → PII fork → write → log + control
+updates → reconcile. Bounded streaming runs drain with
+``Trigger.AvailableNow`` instead of the reference's
+poll-the-control-table-then-stop loop
 (``modules/auto_loader_steps.py:500-528``).
+
+Each batch is read from its source once. A batch with more than one
+reader is pinned once (:func:`observed_pin`), and that pin's job also
+observes what the stages decide on: the batch's source files (drift),
+its corrupt rows and their files (gate) and its expectation
+violations. After it, the writes are projections and filters of the
+pin: a streaming micro-batch runs the pin, the PII append and the main
+append, plus a quarantine or violation write when one is needed.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import ExitStack
-from dataclasses import dataclass
+from contextlib import contextmanager, nullcontext
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog.system import OpsLog, SystemTables
 from ..catalog.table import ManagedTable, TableCatalog
+from ..errors import BadRecordsError
 from ..session import pinned
 from ..sources.batch import read_batch, with_file_metadata
 from ..sources.stream import read_stream
 from ..specs import IngestionSpec
-from .audit import project_rename_audit
+from .audit import project_rename_audit, typed_columns
 from .drift import detect_new_columns, evolve_spec
+from .expectations import row_rules, split_valid, violation_count
 from .masking import mask_columns
-from .quarantine import quarantine_batch
+from .quarantine import _local_path, corrupt_metrics, quarantine_batch
 
 
 @dataclass
@@ -36,6 +48,47 @@ class IngestResult:
     rows_loaded: int
     n_corrupt: int
     table_name: str
+
+
+@dataclass
+class ObservedBatch:
+    """A batch and what the job that pinned it observed. An unpinned
+    batch (a single reader, nothing to gate) observes nothing."""
+
+    df: DataFrame
+    files: list[str] = field(default_factory=list)  # local source files with rows
+    n_corrupt: int = 0
+    corrupt_files: list[str] = field(default_factory=list)
+    n_violations: int = 0
+
+
+@contextmanager
+def observed_pin(batch_df: DataFrame, spec: IngestionSpec, files: bool = False):
+    """Pin ``batch_df`` once (``session.pinned``) with an observation
+    riding the pin's job: the source files (with ``files``), the
+    corrupt-gate metrics when the spec has a corrupt location, and the
+    row-expectation violations, evaluated on the spec's typed columns
+    so they match the rules on the projected batch. Yields an
+    :class:`ObservedBatch`; the pin is released on exit."""
+    metrics = []
+    if files and "source_file_path" in batch_df.columns:
+        metrics.append(F.collect_set("source_file_path").alias("files"))
+    if spec.corrupt_location:
+        metrics += corrupt_metrics(batch_df)
+    if row_rules(spec.expectations):
+        metrics.append(
+            violation_count(spec.expectations, typed_columns(spec)).alias("n_violations")
+        )
+    obs = Observation() if metrics else None
+    with pinned(batch_df.observe(obs, *metrics) if obs else batch_df) as pin:
+        got = obs.get if obs else {}
+        yield ObservedBatch(
+            pin,
+            files=sorted(_local_path(p) for p in got.get("files", [])),
+            n_corrupt=got.get("n_corrupt", 0),
+            corrupt_files=got.get("corrupt_files", []),
+            n_violations=got.get("n_violations", 0),
+        )
 
 
 class IngestionPipeline:
@@ -100,56 +153,56 @@ class IngestionPipeline:
         spec: IngestionSpec,
         target: ManagedTable,
         batch_id: int,
+        check_drift: bool = False,
     ) -> IngestResult:
-        with ExitStack() as pins:
-            # schema drift is settled before a batch gets here: run_batch
-            # evolves the spec from its source sniff, and the stream
-            # handler aborts the epoch in _check_stream_drift
+        """Gate, project, mask and land one batch. ``check_drift`` (the
+        stream handler) sniffs the batch's files for new columns first
+        and aborts before any write."""
+        pii_cols = spec.pii_columns() if spec.pii_table_name else []
+        rules = row_rules(spec.expectations)
+        # more than one reader: the drift files, the gate and the
+        # expectation count are observed on the pin's job, and the
+        # writes read the pin
+        if check_drift or spec.corrupt_location or rules or pii_cols:
+            one_pass = observed_pin(batch_df, spec, files=check_drift)
+        else:
+            one_pass = nullcontext(ObservedBatch(batch_df))
+        with one_pass as batch:
+            # schema drift: run_batch evolved the spec from its source
+            # sniff before reading; a stream aborts the epoch here
+            if check_drift:
+                self._check_stream_drift(batch.files, spec)
 
-            # corrupt gate → quarantine + structured failure; the gate
-            # is a second pass over the batch, so the batch is pinned
-            n_corrupt = 0
+            # corrupt gate → quarantine + structured failure
             if spec.corrupt_location:
-                batch_df = pins.enter_context(pinned(batch_df))
                 try:
-                    n_corrupt = quarantine_batch(
-                        batch_df, spec.corrupt_location, spec.error_location
-                    )
-                except Exception:
+                    quarantine_batch(batch.df, batch.n_corrupt, batch.corrupt_files,
+                                     spec.corrupt_location, spec.error_location)
+                except BadRecordsError:
                     self.log.write(spec.header_id, "ERROR", "Bad records", 3, batch_id)
                     raise
 
-            out = project_rename_audit(batch_df, spec, batch_id)
+            out = project_rename_audit(batch.df, spec, batch_id)
 
             # data-level expectations gate (extension beyond the
             # reference's config-only validation): row-level rules route
             # violating rows to the error location with the failed rule
             # names attached; the batch continues with the valid rows
-            row_rules = [e for e in spec.expectations if e.kind != "unique"]
-            if row_rules:
-                from .expectations import split_valid
-
-                out, viol = split_valid(out, row_rules)
-                out = pins.enter_context(pinned(out))  # consumed by ≥1 write below
-                if spec.error_location:
-                    with pinned(viol) as viol:
-                        n_viol = viol.count()
-                        if n_viol:
-                            viol.write.mode("append").parquet(
-                                os.path.join(spec.error_location, "_expectations")
-                            )
-                else:
-                    n_viol = viol.count()
-                if n_viol:
+            if rules:
+                out, viol = split_valid(out, rules)
+                if batch.n_violations:
+                    if spec.error_location:
+                        viol.write.mode("append").parquet(
+                            os.path.join(spec.error_location, "_expectations")
+                        )
                     self.log.write(
                         spec.header_id, "EXPECTATION",
-                        f"{n_viol} rows failed expectations", 2, batch_id,
+                        f"{batch.n_violations} rows failed expectations", 2, batch_id,
                     )
 
             # PII fork: masked copy to the PII table, clear data to the main
             # table (reference polarity, modules/auto_loader_steps.py:345-371)
-            pii_cols = spec.pii_columns()
-            if pii_cols and spec.pii_table_name:
+            if pii_cols:
                 masked = mask_columns(out, pii_cols, spec.mask_strategy)
                 pii_target = self.catalog.table(spec.pii_table_name)
                 if spec.overwrite:
@@ -165,7 +218,8 @@ class IngestionPipeline:
                 # Delta: commit operationMetrics) — no data scan either way
                 rows = target.append_counted(out)
             self.log.write(spec.header_id, "ROW_COUNT", str(rows), 1, batch_id)
-            return IngestResult(spec.header_id, batch_id, rows, n_corrupt, spec.table_name)
+            return IngestResult(spec.header_id, batch_id, rows, batch.n_corrupt,
+                                spec.table_name)
 
     # -- batch entry point --------------------------------------------------
 
@@ -232,9 +286,10 @@ class IngestionPipeline:
         def handle(batch_df: DataFrame, epoch_id: int) -> None:
             if epoch_id <= self._last_committed_epoch(spec.header_id):
                 return  # replayed epoch — already landed
-            self._check_stream_drift(batch_df, spec)
+            # a read of the control table: a drift abort inside
+            # process_batch leaves the next id unchanged
             batch_id = self._next_batch_id(spec)
-            self.process_batch(batch_df, spec, target, batch_id)
+            self.process_batch(batch_df, spec, target, batch_id, check_drift=True)
             self.log.write(spec.header_id, "EPOCH_COMMIT", str(epoch_id), 1,
                            batch_id, update_control=False)
 
@@ -247,7 +302,7 @@ class IngestionPipeline:
             q = writer.trigger(availableNow=True).start()
             try:
                 q.awaitTermination(timeout_s)
-            except Exception as e:
+            except StreamingQueryException as e:
                 if "schema drift on header" in str(e):
                     # epoch aborted pre-commit: restart reprocesses the
                     # drift files with the evolved (string-typed) schema
@@ -262,27 +317,20 @@ class IngestionPipeline:
         self.active_streams[spec.header_id] = q
         return q
 
-    def _check_stream_drift(self, batch_df: DataFrame, spec: IngestionSpec) -> None:
+    def _check_stream_drift(self, files: list[str], spec: IngestionSpec) -> None:
         """Sniff the batch's source files for columns the spec lacks.
 
         Streams read with a declared schema can never *show* new columns
         in the batch DataFrame, whatever the format, so the check goes
         back to the files (driver-side header/footer sniff of just this
-        batch's files). On drift: record the new columns in
+        batch's files). ``files`` is the batch's observed file set: the
+        files that hold rows, learnt on the pin's job, so the check runs
+        no job of its own. On drift: record the new columns in
         column_config, then abort the epoch BEFORE its commit (T7
         semantics — restart reprocesses).
         """
         from ..errors import StreamRestartRequired
-        from .quarantine import _local_path
 
-        if "source_file_path" not in batch_df.columns:
-            return
-        files = [
-            _local_path(r.p)
-            for r in batch_df.select(
-                F.col("source_file_path").alias("p")
-            ).distinct().collect()
-        ]
         new = detect_new_columns(self.spark, spec, files)
         if new:
             self.log.write(spec.header_id, "SCHEMA_DRIFT",

@@ -7,14 +7,15 @@ location, and raise ``'Bad records'``.
 
 Fixes over the reference (documented, SURVEY §7.4): it scans the batch
 twice (count then collect) and its file-move loop raises after the
-first file so later files never move — we compute the per-file corrupt
-counts in ONE aggregation and move every file.
+first file so later files never move — we move every file, and the
+gate costs no scan of its own: :func:`corrupt_metrics` are observed
+(``DataFrame.observe``) on the job that pins the batch, which returns
+the corrupt-row count and the offending files with the pin.
 
 Implementation note: Spark refuses queries whose referenced columns
 from a raw CSV/JSON scan are only the corrupt-record column
-(QUERY_ONLY_CORRUPT_RECORD_COLUMN), and ``_metadata`` can't resolve
-through a pinned plan — so the gate aggregates on the materialized
-``source_file_path`` lineage column instead.
+(QUERY_ONLY_CORRUPT_RECORD_COLUMN). The observation sits on the pinned
+plan, which reads every column, so the restriction does not apply.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import BadRecordsError
@@ -39,40 +40,35 @@ def _local_path(p: str) -> str:
     return p
 
 
-def corrupt_summary(df: DataFrame, file_col: str = "source_file_path") -> tuple[int, list[str]]:
-    """(corrupt-row count, distinct offending files) in one aggregation.
-
-    NOTE: the caller must pass a pinned ``df`` (``session.pinned``) —
-    Spark disallows queries referencing only the corrupt-record column
-    on a raw CSV/JSON scan, and the pinned relation lifts that
-    restriction."""
+def corrupt_metrics(df: DataFrame, file_col: str = "source_file_path") -> list[Column]:
+    """Observed metrics of the gate: ``n_corrupt`` (rows with rescued
+    data) and ``corrupt_files`` (their distinct source files). Empty
+    when ``df`` has no corrupt-record column."""
     if RESCUED not in df.columns:
-        return 0, []
+        return []
+    bad = F.col(RESCUED).isNotNull()
     key = F.col(file_col) if file_col in df.columns else F.col("_metadata.file_path")
-    per_file = (
-        df.filter(F.col(RESCUED).isNotNull())
-        .groupBy(key.alias("p"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    return sum(r.n for r in per_file), [r.p for r in per_file]
+    return [
+        F.count_if(bad).alias("n_corrupt"),
+        F.collect_set(F.when(bad, key)).alias("corrupt_files"),
+    ]
 
 
 def quarantine_batch(
     df: DataFrame,
+    n_bad: int,
+    bad_files: list[str],
     corrupt_location: str,
     error_location: str | None = None,
-    raise_on_bad: bool = True,
-) -> int:
-    """Gate a batch on corrupt rows. Returns the corrupt-row count.
-
-    If any corrupt rows exist: whole batch → ``corrupt_location``
+) -> None:
+    """Act on a batch's observed :func:`corrupt_metrics`: nothing when
+    ``n_bad`` is 0. Otherwise the whole batch → ``corrupt_location``
     (parquet), offending source files → ``error_location``, then raise
-    :class:`BadRecordsError` (unless ``raise_on_bad=False``).
+    :class:`BadRecordsError`. ``df`` is the pinned batch the metrics
+    were observed on.
     """
-    n_bad, bad_files = corrupt_summary(df)
     if not n_bad:
-        return 0
+        return
     df.write.mode("overwrite").parquet(corrupt_location)
     if error_location:
         os.makedirs(error_location, exist_ok=True)
@@ -83,6 +79,4 @@ def quarantine_batch(
                     error_location, f"{uuid.uuid4().hex[:8]}-{os.path.basename(local)}"
                 )
                 shutil.move(local, dest)
-    if raise_on_bad:
-        raise BadRecordsError(n_bad, corrupt_location)
-    return n_bad
+    raise BadRecordsError(n_bad, corrupt_location)

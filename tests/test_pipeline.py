@@ -297,3 +297,200 @@ def test_expectations_gate_routes_bad_rows(spark, catalog, tmp_root):
     assert (
         logs.filter(F.col("LogEntryType") == "EXPECTATION").count() == 1
     )
+
+
+def _count_py4j(monkeypatch, fn):
+    """Run ``fn``; return its result and the py4j round trips it made."""
+    from py4j.java_gateway import GatewayClient
+
+    sent = []
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        sent.append(1)
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    try:
+        out = fn()
+    finally:
+        monkeypatch.undo()
+    return out, len(sent)
+
+
+def test_landing_projections_build_in_few_py4j_round_trips(spark, monkeypatch):
+    """The audit projection, the PII mask and the append conform are
+    each one ``selectExpr`` of SQL text (~140-380 round trips each when
+    built one ``Column.cast`` at a time), with the schemas they had."""
+    from pyspark.sql import types as T
+
+    from dataingestionframework_spark.catalog.table import ManagedTable
+    from dataingestionframework_spark.ingest.audit import project_rename_audit
+    from dataingestionframework_spark.ingest.masking import mask_columns
+    from dataingestionframework_spark.specs import AUDIT_FIELDS
+
+    spec = _spec("/unused", "/unused", columns=[
+        ColumnSpec("Id", "Id", "int", 1),
+        ColumnSpec("Email", "Email", "string", 2, is_pii=True),
+        ColumnSpec("Amount", "Amount", "decimal(10,2)", 3),
+        ColumnSpec("Cat`egory", "Category", "string", 4),
+        ColumnSpec("Dt", "Dt", "date", 5),
+    ])
+    raw = spark.createDataFrame(
+        [("1", "a@x", "1.50", "c", "2024-01-01", None, "f")],
+        "Id string, Email string, Amount string, `Cat``egory` string, Dt string, "
+        "_rescued_data string, source_file_path string",
+    )
+    raw.schema  # noqa: B018 — resolve before counting
+    # the first build in a process also resolves JVM classes through
+    # py4j; count a micro-batch's steady state
+    project_rename_audit(raw, spec, 3)
+    mask_columns(ManagedTable._conform(raw, raw.schema, raw.schema), ["Email"], "hash")
+
+    out, n = _count_py4j(monkeypatch, lambda: project_rename_audit(raw, spec, 3))
+    assert n <= 30, n
+    want = [(f.name, f.dataType) for f in spec.target_schema().fields]
+    assert [(f.name, f.dataType) for f in out.schema.fields] == want
+    assert [f.nullable for f in out.schema.fields][-3:] == [False] * 3
+
+    out.schema  # noqa: B018
+    masked, n = _count_py4j(monkeypatch, lambda: mask_columns(out, ["Email", "Id"], "hash"))
+    assert n <= 30, n
+    assert masked.dtypes[:2] == [("Id", "string"), ("Email", "string")]
+    nulled = mask_columns(out, ["Email"], "nullify")
+    assert nulled.schema["Email"].dataType == T.NullType()
+
+    stored = T.StructType(
+        [T.StructField("Id", T.LongType()), T.StructField("Email", T.StringType()),
+         T.StructField("Region", T.StringType())] + AUDIT_FIELDS
+    )
+    incoming = out.schema
+    conformed, n = _count_py4j(
+        monkeypatch, lambda: ManagedTable._conform(out, incoming, stored))
+    assert n <= 30, n
+    assert conformed.schema == T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in stored.fields[:3]]
+        + [T.StructField(f.name, f.dataType, False) for f in AUDIT_FIELDS]
+    )
+    row = conformed.first()
+    assert (row.Id, row.Email, row.Region, row.BatchId) == (1, "a@x", None, 3)
+
+    # a missing nested column keeps the stored nested nullability
+    tags = T.StructField("Tags", T.ArrayType(T.StringType(), containsNull=False))
+    wider = T.StructType(stored.fields + [tags])
+    assert ManagedTable._conform(out, incoming, wider).schema["Tags"] == tags
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_process_batch_is_one_pinned_pass(spark, catalog, src_dir, tmp_root):
+    """Corrupt gate, a row expectation and a PII fork: the pin's job
+    observes the gate and the expectation count, so the batch runs
+    three jobs (the pin, the PII append, the main append)."""
+    from dataingestionframework_spark.ingest.expectations import Expectation
+    from dataingestionframework_spark.sources.batch import read_batch, with_file_metadata
+
+    pipe = IngestionPipeline(catalog)
+    spec = _spec(tmp_root, src_dir, header_id=40, table_name="main.onepass",
+                 source_name="onepass", pii_table_name="main.onepass_pii",
+                 expectations=[Expectation("value_nonneg", "Value", "between",
+                                           lo=0.0, hi=1e9)])
+    target = pipe.prepare(spec)
+    batch = with_file_metadata(read_batch(spark, spec))
+    res, jobs = _jobs(spark, "one_pinned_pass",
+                      lambda: pipe.process_batch(batch, spec, target, 1))
+    assert (res.rows_loaded, res.n_corrupt) == (2, 0)
+    assert jobs <= 3, jobs
+    assert catalog.table("main.onepass_pii").count() == 2
+
+
+def test_pii_and_main_rows_carry_the_same_audit_values(spark, catalog, src_dir, tmp_root):
+    """The audit time is taken once per batch, so both copies agree."""
+    pipe = IngestionPipeline(catalog)
+    spec = _spec(tmp_root, src_dir, header_id=41, table_name="main.audit",
+                 source_name="audit", pii_table_name="main.audit_pii",
+                 corrupt_location="")
+    pipe.run_batch(spec)
+    cols = ["Id", "BatchId", "InsertDate", "ModifiedDateTime"]
+    main = catalog.table("main.audit").read().select(*cols).collect()
+    pii = catalog.table("main.audit_pii").read().select(*cols).collect()
+    assert sorted(main) == sorted(pii) and len(main) == 2
+    assert len({r.ModifiedDateTime for r in main}) == 1
+
+
+def test_stream_corrupt_batch_is_quarantined_and_not_committed(spark, catalog, tmp_root):
+    """A corrupt file fails its micro-batch through run_stream: the
+    whole batch lands in the corrupt location, the corrupt file (only)
+    moves to the error location, and the epoch commits nothing."""
+    from pyspark.errors import StreamingQueryException
+
+    d = os.path.join(tmp_root, "src_scorrupt")
+    os.makedirs(d)
+    with open(os.path.join(d, "a_good.csv"), "w") as f:
+        f.write(CSV_GOOD)
+    with open(os.path.join(d, "b_bad.csv"), "w") as f:
+        f.write(CSV_BAD)
+    pipe = IngestionPipeline(catalog)
+    spec = _spec(tmp_root, d, header_id=42, table_name="main.scorrupt",
+                 source_name="scorrupt", pii_table_name="main.scorrupt_pii",
+                 max_files_per_trigger=2, checkpoint_location=os.path.join(tmp_root, "scorrupt_ckpt"))
+    with pytest.raises(StreamingQueryException, match="Bad records"):
+        pipe.run_stream(spec, bounded=True, timeout_s=120)
+    assert spark.read.parquet(spec.corrupt_location).count() == 4
+    assert [n.split("-", 1)[1] for n in os.listdir(spec.error_location)] == ["b_bad.csv"]
+    assert os.listdir(d) == ["a_good.csv"]
+    assert catalog.table("main.scorrupt").count() == 0
+    logs = pipe.tables.logs.read().filter(F.col("HeaderID") == 42)
+    assert logs.filter(F.col("LogEntryType") == "EPOCH_COMMIT").count() == 0
+    assert logs.filter(F.col("LogEntryType") == "ERROR").count() == 1
+
+
+def test_stream_expectation_on_renamed_column(spark, catalog, tmp_root):
+    """Stream rules name target columns (Item lands as ItemName); the
+    observed count and the routed rows agree."""
+    from dataingestionframework_spark.ingest.expectations import Expectation
+
+    d = os.path.join(tmp_root, "src_sexp")
+    os.makedirs(d)
+    with open(os.path.join(d, "f1.csv"), "w") as f:
+        f.write("Id,Item,Dt,Value\n1,widget,2024-01-02,10.50\n2,,2024-01-03,1.00\n")
+    pipe = IngestionPipeline(catalog)
+    spec = _spec(tmp_root, d, header_id=43, table_name="main.sexp", source_name="sexp",
+                 pii_table_name="", corrupt_location="",
+                 checkpoint_location=os.path.join(tmp_root, "sexp_ckpt"),
+                 expectations=[Expectation("item_not_null", "ItemName", "not_null")])
+    pipe.run_stream(spec, bounded=True, timeout_s=120)
+    assert [r.Id for r in catalog.table("main.sexp").read().collect()] == [1]
+    viol = spark.read.parquet(os.path.join(spec.error_location, "_expectations"))
+    assert {r.Id: r._failed_rules for r in viol.collect()} == {2: "item_not_null"}
+    logs = pipe.tables.logs.read().filter(F.col("LogEntryType") == "EXPECTATION")
+    assert [r.LogDescription for r in logs.collect()] == ["1 rows failed expectations"]
+
+
+def test_json_corrupt_record_goes_through_the_observed_gate(spark, catalog, tmp_root):
+    d = os.path.join(tmp_root, "src_json")
+    os.makedirs(d)
+    with open(os.path.join(d, "good.json"), "w") as f:
+        f.write('{"Id": 1, "Item": "a", "Dt": "2024-01-01", "Value": 1.5}\n')
+    with open(os.path.join(d, "bad.json"), "w") as f:
+        f.write('{"Id": 2, "Item": "b", "Dt": "2024-01-02", "Value": 2.5}\n{"Id": 3, "Item\n')
+    pipe = IngestionPipeline(catalog)
+    spec = _spec(tmp_root, d, header_id=44, table_name="main.jcorrupt",
+                 source_name="jcorrupt", file_format="json", pii_table_name="")
+    with pytest.raises(BadRecordsError) as e:
+        pipe.run_batch(spec)
+    assert e.value.n_bad == 1
+    assert spark.read.parquet(spec.corrupt_location).count() == 3
+    assert sorted(os.listdir(d)) == ["good.json"]
+    assert catalog.table("main.jcorrupt").count() == 0
